@@ -705,31 +705,21 @@ object Dedup {
     * structurally and EXACTLY each round: every child points at one
     * parent and no parent is itself a child — both conditions provably
     * hold iff the rounds are no-ops, so there is no probabilistic
-    * hash-compare in the loop. `localCheckpoint(eager)` cuts lineage
-    * every round — without it the plan doubles per iteration and the
-    * job DAG blows up long before the data does. Per-round cost is
-    * O(|E|) shuffle on the node id; at 100 TB the edge list (near-dup
-    * pairs) is orders of magnitude smaller than the corpus, so rounds
-    * are cheap relative to the pair generation that feeds this.
+    * hash-compare in the loop. An eager `localCheckpoint` after each
+    * phase cuts lineage every round — without it the plan doubles per
+    * iteration and the job DAG blows up long before the data does.
+    * Eager beats lazy checkpoints (fused into the fixpoint probe, two
+    * fewer job submissions per round) on all four cluster queries at
+    * sf0.1 (5.60 s vs 6.35 s summed, min-of-5 on 32 cores): the saved
+    * round-trips never amortize the fused probe's cost. Per-round
+    * cost is O(|E|) shuffle on the node id; at 100 TB the edge list
+    * (near-dup pairs) is orders of magnitude smaller than the corpus,
+    * so rounds are cheap relative to the pair generation that feeds
+    * this.
     *
     * Throws rather than returning a half-merged labeling if maxIter
     * rounds don't reach the fixpoint (with star contraction that
     * would take a graph of ~2^sqrt(maxIter) chained nodes). */
-  /** In-loop checkpoint mode. Adjudicated r11 (quiet window, min-of-5
-    * at 32 cores, both run orders): EAGER is faster on all four
-    * cluster queries at sf0.1 (family min 5.60 s vs 6.35 s lazy —
-    * q_copurchase_components 0.73 vs 0.97, q_minhash_cluster 1.48 vs
-    * 1.63, q_charhash_cluster 1.72 vs 1.80, q_dedup_cluster 1.67 vs
-    * 1.95), confirming the r10 driver-bench regression was real. The
-    * lazy variant's structural saving is only 2 job-submission
-    * round-trips per round (stages and shuffles are identical), which
-    * never amortizes its measured fused-probe penalty — so eager is
-    * the default at every scale; SPARK_GRAFT_CC_EAGER=false keeps the
-    * lazy branch reachable for A/B (both are result-identical,
-    * DedupSpec pins the labeling). */
-  private def ccEagerCheckpoints: Boolean =
-    sys.env.get("SPARK_GRAFT_CC_EAGER").forall(_.toBoolean)
-
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     // Canonicalize to (child, parent) with parent <= child and
@@ -776,19 +766,14 @@ object Dedup {
       val largeMins = adj.groupBy("n")
         .agg(min("nbr").as("mn"))
         .select(col("n"), least(col("n"), col("mn")).as("m"))
-      // Per-phase EAGER checkpoints (default — see ccEagerCheckpoints
-      // for the r11 adjudication): 3 jobs/round, each phase
+      // Per-phase eager checkpoints: 3 jobs/round, each phase
       // materialized before the next reads it twice through sym().
-      // SPARK_GRAFT_CC_EAGER=false switches to lazy checkpoints whose
-      // single fixpoint-probe action materializes both phases in one
-      // job — structurally fewer dispatches but measured slower at
-      // every tested size; kept reachable for A/B.
       val afterLarge = adj.filter(col("nbr") > col("n"))
         .join(largeMins, "n")
         .select(col("nbr").as("c"), col("m").as("p"))
         .filter(col("c") =!= col("p"))
         .distinct()
-        .localCheckpoint(ccEagerCheckpoints)
+        .localCheckpoint()
       // small-star: node n attaches its smaller neighbors and itself
       // to the minimum of its smaller neighborhood.
       val adj2 = sym(afterLarge)
@@ -799,7 +784,7 @@ object Dedup {
         .select(col("nbr").as("c"), col("m").as("p"))
         .unionByName(smallMins.select(col("n").as("c"), col("m").as("p")))
         .distinct()
-        .localCheckpoint(ccEagerCheckpoints)
+        .localCheckpoint()
       // EXACT fixpoint test, no hash-compare: the pointer set is a
       // star forest iff (1) every child has exactly one parent and
       // (2) no parent is itself a child — and a star forest is

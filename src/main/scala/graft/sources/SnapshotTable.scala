@@ -24,7 +24,12 @@ import org.apache.spark.sql.types._
   *     prepare their file lists; one wins v<N>, the loser observes the
   *     conflict and RETRIES the commit against v<N> (append = re-union
   *     file lists, no data rewrite — optimistic concurrency, the
-  *     Delta/Iceberg commit loop in miniature).
+  *     Delta/Iceberg commit loop in miniature). There is ONE commit
+  *     loop ([[commitLoop]]): each attempt resolves the head state
+  *     once, hands it to the operation, which maps it to the complete
+  *     next [[TableState]] (`base.copy(...)` — whatever the operation
+  *     does not touch is inherited by construction) after its conflict
+  *     checks, and publishes that state as v<N+1>.
   *   - **Appends write data files FIRST, then commit.** A crash
   *     between the two leaves orphan files invisible to every reader
   *     (the manifest never references them) — cleaned by [[vacuum]],
@@ -139,10 +144,12 @@ object SnapshotTable {
     * conf flips only around the probe's own action and restores on
     * exit. Valid at any scale: the probe result size is bounded by
     * contract (collect caps / file counts), not by table size. */
-  /** A/B escape hatch (and production knob): set
-    * SPARK_GRAFT_PROBE_AQE=true to keep AQE on inside probes. */
-  private val ProbeAqeOff: Boolean =
-    !sys.env.get("SPARK_GRAFT_PROBE_AQE").exists(_.equalsIgnoreCase("true"))
+  private[graft] def probe[T](spark: SparkSession, tag: String)
+                             (body: => T): T = labeled(spark, tag) {
+    withSessionConf(spark, AqeKey, "false")(body)
+  }
+
+  private val AqeKey = "spark.sql.adaptive.enabled"
 
   /** Depth-counted SESSION-CONF LEASE: the FIRST concurrent scope for
     * a (session, key) saves the session's value and sets the
@@ -194,14 +201,6 @@ object SnapshotTable {
         if (m.isEmpty) confLeases.remove(spark)
       }
     }
-  }
-
-  private val AqeKey = "spark.sql.adaptive.enabled"
-
-  private[graft] def probe[T](spark: SparkSession, tag: String)
-                             (body: => T): T = labeled(spark, tag) {
-    if (!ProbeAqeOff) body
-    else withSessionConf(spark, AqeKey, "false")(body)
   }
 
   /** Internal batch writer with the Hadoop job-commit ceremony cut
@@ -364,6 +363,10 @@ object SnapshotTable {
       // pre-file sets only SHRINK: rewrites materialize the default
       // into new files, and commits prune entries to live files.
       defaults: Map[String, (String, Set[String])] = Map.empty)
+
+  /** The state a table's first commit builds on. */
+  private val EmptyState = TableState(Nil, Map.empty, Map.empty, Map.empty,
+    Nil, Map.empty, None, Map.empty)
 
   /** A table-wide bucketing CLAIM: every data file of the version was
     * written by [[appendBucketed]] with this spec — file names carry
@@ -1406,97 +1409,94 @@ object SnapshotTable {
     name
   }
 
-  /** Try to commit the COMPLETE target state (`files`, `stats`,
-    * `bloomRefs`) as version `v`. True iff this writer won the
-    * publish race for v<N>. What lands on disk is a DELTA against
-    * v-1 (adds/removes + adds' stats/bloom refs — O(batch) bytes)
-    * except every [[CheckpointEvery]]-th version and v0, which write
-    * the full checkpoint form; readers reconstruct via [[stateOf]].
+  /** THE commit loop — every committing operation runs through it.
+    * Each attempt resolves the head once (`latestVersion`, then its
+    * state — None for a table with no commits) and hands it to
+    * `next`, which runs the operation's conflict checks and returns
+    * the complete state to publish as the next version, or None for a
+    * no-op (a replayed transaction, nothing left to change) — returned
+    * as-is. A lost publish race re-resolves the new head and retries.
+    * `op` names the operation in errors; `recordAs` overrides the op
+    * recorded in the manifest. */
+  private def commitLoop(spark: SparkSession, dir: String, op: String,
+                         maxRetries: Int, recordAs: Option[String] = None)
+                        (next: Option[TableState] => Option[TableState]
+                        ): Option[Long] = {
+    var attempt = 0
+    while (attempt < maxRetries) {
+      val base = latestVersion(spark, dir)
+      val parent = base.map(stateOf(spark, dir, _))
+      val v = base.fold(0L)(_ + 1)
+      next(parent) match {
+        case None => return None
+        case Some(target) =>
+          if (tryCommit(spark, dir, v, parent, target, recordAs.getOrElse(op)))
+            return Some(v)
+      }
+      attempt += 1 // lost the race: re-read the new head and retry
+    }
+    throw new java.io.IOException(
+      s"$op: lost the commit race $maxRetries times under $dir")
+  }
+
+  /** The head state for an operation that needs a committed table. */
+  private def headState(st: Option[TableState], op: String,
+                        dir: String): TableState =
+    st.getOrElse(throw new java.io.IOException(
+      s"$op: no committed version under $dir"))
+
+  /** True when `st`'s ledger already holds `txn` (or a later version
+    * of its app id): the exactly-once writer's replay no-op. */
+  private def replayed(st: TableState,
+                       txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (appId, tv) =>
+      st.txns.getOrElse(appId, Long.MinValue) >= tv }
+
+  /** `st` under a batch's column-mapping claim (the possibly extended
+    * mapping its files were written with). */
+  private def withClaim(st: TableState, claim: Option[MapClaim]): TableState =
+    claim.fold(st)(c => st.copy(colMap = c.colMap, retired = c.retired))
+
+  /** Try to publish `target` — the COMPLETE next state — as version
+    * `v` on top of `parent` (the state at v-1, None for v0). True iff
+    * this writer won the publish race for v<N>. What lands on disk is
+    * a DELTA against the parent (adds/removes + adds' stats/bloom refs
+    * — O(batch) bytes) except every [[CheckpointEvery]]-th version and
+    * v0, which write the full checkpoint form; readers reconstruct via
+    * [[stateOf]]. Column defaults PRUNE to the target's live files
+    * here: a rewritten pre-ADD file materialized its default, so its
+    * entry (and, eventually, the whole column's) retires.
     * Content-atomic: the body is fully written to a hidden temp file,
     * then renamed into place — a reader can never observe a
     * partially-written manifest. */
   private def tryCommit(spark: SparkSession, dir: String, v: Long,
-                        files: Seq[String],
-                        txns: Map[String, Long] = Map.empty,
-                        stats: Map[String, Map[String, ColStat]] = Map.empty,
-                        schema: Option[StructType] = None,
-                        bloomRefs: Map[String, String] = Map.empty,
-                        bloomCols: Seq[String] = Nil,
-                        sizes: Map[String, Long] = Map.empty,
-                        op: String = "commit",
-                        dvRefs: Map[String, String] = Map.empty,
-                        bucket: Option[BucketLayout] = None,
-                        constraints: Option[Map[String, String]] = None,
-                        colMapOpt: Option[(Map[String, String],
-                          Seq[String])] = None,
-                        propsOpt: Option[Map[String, String]] = None,
-                        defaultsOpt: Option[Map[String,
-                          (String, Set[String])]] = None
-                       ): Boolean = commitLock.synchronized {
+                        parent: Option[TableState], target: TableState,
+                        op: String): Boolean = commitLock.synchronized {
     val f = fs(spark, dir)
     f.mkdirs(manifestDir(dir))
-    val target = manifestPath(dir, v)
-    if (f.exists(target)) return false
+    val path = manifestPath(dir, v)
+    if (f.exists(path)) return false
+    val live = target.files.toSet
+    val pruned = target.copy(defaults = target.defaults
+      .map { case (c, (dv, pre)) => c -> (dv, pre.intersect(live)) }
+      .filter(_._2._2.nonEmpty))
     val full = v == 0L || v % CheckpointEvery == 0L
-    // None = inherit the parent's constraint set (constraints are
-    // table policy — only addConstraint/dropConstraint pass Some).
-    val effConstraints = constraints.getOrElse(
-      if (v == 0L) Map.empty[String, String]
-      else scala.util.Try(stateOf(spark, dir, v - 1).constraints)
-        .getOrElse(Map.empty[String, String]))
-    // Table properties inherit identically (None = parent's set;
-    // only setProperties/unsetProperties/clone pass Some).
-    val effProps = propsOpt.getOrElse(
-      if (v == 0L) Map.empty[String, String]
-      else scala.util.Try(stateOf(spark, dir, v - 1).props)
-        .getOrElse(Map.empty[String, String]))
-    // Column mapping inherits identically (None = parent's mapping;
-    // only renameColumn/dropColumn/restore/clone and the evolving
-    // append commits pass Some).
-    val (effColMap, effRetired) = colMapOpt.getOrElse(
-      if (v == 0L) (Map.empty[String, String], Seq.empty[String])
-      else scala.util.Try(stateOf(spark, dir, v - 1))
-        .map(p => (p.colMap, p.retired))
-        .getOrElse((Map.empty[String, String], Seq.empty[String])))
-    // Column defaults inherit like colmap (None = parent's; only
-    // addColumn/restore/clone pass Some) — and PRUNE to this commit's
-    // live files: a rewritten pre-ADD file materialized its default,
-    // so its entry (and, eventually, the whole column's) retires.
-    val effDefaults = defaultsOpt.getOrElse(
-      if (v == 0L) Map.empty[String, (String, Set[String])]
-      else scala.util.Try(stateOf(spark, dir, v - 1).defaults)
-        .getOrElse(Map.empty[String, (String, Set[String])]))
-      .map { case (c, (dv, pre)) => c -> (dv, pre.intersect(files.toSet)) }
-      .filter(_._2._2.nonEmpty)
-    val body = manifestBody(spark, dir, v, full, files, txns, stats,
-      schema, bloomRefs, bloomCols, sizes, op, dvRefs, bucket,
-      effConstraints, colMap = effColMap, retired = effRetired,
-      props = effProps, defaults = effDefaults)
-    TableIO.createTextExclusive(f, target, body)
+    TableIO.createTextExclusive(f, path,
+      manifestBody(spark, dir, v, parent, pruned, full, op))
   }
 
-  /** Serialize a manifest body — full checkpoint form, or a delta
-    * against the (already committed, hence stable) state at v-1. */
+  /** Serialize `target` as manifest v — full checkpoint form, or a
+    * delta against `parent` (the already committed, hence stable,
+    * state at v-1). A full checkpoint uses `parent` only to reuse its
+    * unchanged segments. The target's resolution-only fields
+    * (`segments`, `dvDirty`, `legacyBlooms`) are never written. */
   private def manifestBody(spark: SparkSession, dir: String, v: Long,
-                           full: Boolean, files: Seq[String],
-                           txns: Map[String, Long],
-                           stats: Map[String, Map[String, ColStat]],
-                           schema: Option[StructType],
-                           bloomRefs: Map[String, String],
-                           bloomCols: Seq[String],
-                           sizes: Map[String, Long],
-                           op: String = "commit",
-                           dvRefs: Map[String, String] = Map.empty,
-                           bucket: Option[BucketLayout] = None,
-                           constraints: Map[String, String] = Map.empty,
+                           parent: Option[TableState], target: TableState,
+                           full: Boolean, op: String,
                            tsOverride: Option[Long] = None,
-                           stampTs: Boolean = true,
-                           colMap: Map[String, String] = Map.empty,
-                           retired: Seq[String] = Nil,
-                           props: Map[String, String] = Map.empty,
-                           defaults: Map[String, (String, Set[String])] =
-                             Map.empty
-                          ): String = {
+                           stampTs: Boolean = true): String = {
+    import target.{bloomCols, bloomRefs, bucket, colMap, constraints,
+      defaults, dvRefs, files, props, retired, schema, sizes, stats, txns}
     val root = new java.util.LinkedHashMap[String, Object]()
     root.put("version", java.lang.Long.valueOf(v))
     // Commit wall-clock — what TIMESTAMP AS OF resolves against
@@ -1621,9 +1621,6 @@ object SnapshotTable {
       // O(batch + churn), never O(table). Segment count is bounded by
       // folding the smallest reusable segments into the new one
       // (log-structured merging — amortized O(batch·log) bytes).
-      val parent =
-        if (v == 0L) None
-        else scala.util.Try(stateOf(spark, dir, v - 1)).toOption
       val parentSegs = parent.map(_.segments).getOrElse(Nil)
       val dirty = parent.map(p => p.dvDirty ++
         files.filter(f => dvRefs.get(f) != p.dvRefs.get(f)))
@@ -1658,10 +1655,10 @@ object SnapshotTable {
       putSizes(sizes.view.filterKeys(fileSet).toMap)
       putRefMap("dvrefs", dvRefs.view.filterKeys(fileSet).toMap)
     } else {
-      val parent = stateOf(spark, dir, v - 1)
-      val parentSet = parent.files.toSet
+      val base = parent.get // v > 0: the commit resolved v-1
+      val parentSet = base.files.toSet
       val adds = files.filterNot(parentSet)
-      val removes = parent.files.filterNot(fileSet)
+      val removes = base.files.filterNot(fileSet)
       val aj = new java.util.ArrayList[String]()
       adds.sorted.foreach(aj.add)
       root.put("adds", aj)
@@ -1675,12 +1672,12 @@ object SnapshotTable {
       // the entries that changed vs the parent (new files' vectors
       // and MoR-superseded vectors of carried files).
       putRefMap("dvrefs", dvRefs.view.filterKeys(fileSet)
-        .filter { case (f, r) => !parent.dvRefs.get(f).contains(r) }.toMap)
+        .filter { case (f, r) => !base.dvRefs.get(f).contains(r) }.toMap)
       // A CARRIED file whose vector is DROPPED (restore to a
       // pre-vector version) needs an explicit remove record — an
       // override map alone can't say "no vector anymore".
-      val dvRemoves = parent.files.filter(f => fileSet(f) &&
-        parent.dvRefs.contains(f) && !dvRefs.contains(f)).sorted
+      val dvRemoves = base.files.filter(f => fileSet(f) &&
+        base.dvRefs.contains(f) && !dvRefs.contains(f)).sorted
       if (dvRemoves.nonEmpty) {
         val dj = new java.util.ArrayList[String]()
         dvRemoves.foreach(dj.add)
@@ -1689,16 +1686,16 @@ object SnapshotTable {
       // constraints in a delta only when the set CHANGED — a
       // present-but-empty object is an explicit clear, absence
       // inherits (see deltaState).
-      if (constraints != parent.constraints) putConstraints(constraints)
+      if (constraints != base.constraints) putConstraints(constraints)
       // column mapping in a delta only when it CHANGED (same
       // discipline: present = replace, explicit-empty = clear).
-      if (colMap != parent.colMap || retired != parent.retired) putColMap()
+      if (colMap != base.colMap || retired != base.retired) putColMap()
       // properties: same change-only discipline. No reader feature
       // guard — props never change READ semantics, only write routing.
-      if (props != parent.props) putProps(props)
+      if (props != base.props) putProps(props)
       // column defaults: change-only (present = replace, explicit
       // empty = clear — the last-pre-file-rewritten case)
-      if (defaults != parent.defaults) putDefaults(defaults)
+      if (defaults != base.defaults) putDefaults(defaults)
     }
     // Stamp exactly the reader features this manifest's resolution
     // depends on (see [[SupportedFeatures]]); a plain manifest stays
@@ -2291,32 +2288,25 @@ object SnapshotTable {
     // same as constraints do — one overwrite must not strip pruning
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
     val wb = writeBatch(df, dir, sCols, bCols, strictBlooms = false)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(spark, dir)
-      val st = base.map(stateOf(spark, dir, _))
+    commitLoop(spark, dir, "overwrite", maxRetries) { st =>
       checkMapClaim(st, wb.claim, "overwrite")
-      val txns = st.map(_.txns).getOrElse(Map.empty)
-      validated = recheckConstraints(spark, dir,
-        st.map(_.constraints).getOrElse(Map.empty), validated,
+      val base = st.getOrElse(EmptyState)
+      validated = recheckConstraints(spark, dir, base.constraints, validated,
         wb.added, Some(df.schema), "overwrite",
         wb.claim.map(_.colMap).getOrElse(Map.empty))
-      val v = base.getOrElse(-1L) + 1
-      if (tryCommit(spark, dir, v, wb.added, txns, wb.stats,
-          Some(StructType(df.schema.fields.map(_.copy(nullable = true)))),
-          wb.refs, wb.bloomCols, wb.sizes, "overwrite",
-          colMapOpt = wb.claim.map(c => (c.colMap, c.retired))))
-        return v
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"overwrite: lost the commit race $maxRetries times under $dir")
+      // only the ledger and table policy (constraints, properties,
+      // mapping) survive a replace
+      Some(withClaim(base.copy(files = wb.added, stats = wb.stats,
+        schema = Some(StructType(df.schema.fields.map(_.copy(nullable = true)))),
+        bloomRefs = wb.refs, bloomCols = wb.bloomCols, sizes = wb.sizes,
+        dvRefs = Map.empty, bucket = None), wb.claim))
+    }.get
   }
 
-  /** The optimistic append commit loop, shared by every
-    * already-written-batch committer: union the current file list
-    * with `added`, carry txns/stats/bloom refs forward, evolve the
-    * schema, retry on a lost race. */
+  /** The append commit, shared by every already-written-batch
+    * committer: through [[commitLoop]], union the head's file list
+    * with `added`, carry txns/stats/bloom refs forward and evolve the
+    * schema. None = a replayed `txn`. */
   private def commitAppend(spark: SparkSession, dir: String,
                            dfSchema: StructType, added: Seq[String],
                            addedStats: Map[String, Map[String, ColStat]],
@@ -2331,10 +2321,7 @@ object SnapshotTable {
                            claim: Option[MapClaim] = None
                           ): Option[Long] = {
     var validated = validatedConstraints
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(spark, dir)
-      val st = base.map(stateOf(spark, dir, _))
+    commitLoop(spark, dir, op, maxRetries) { st =>
       checkMapClaim(st, claim, op)
       // A bucketing claim only survives the commit if whatever table
       // state this attempt lands on still supports it (empty, or
@@ -2342,34 +2329,23 @@ object SnapshotTable {
       // degrades the claim instead of corrupting co-location.
       val effBucket = bucket.filter(b =>
         st.forall(s => s.files.isEmpty || s.bucket.contains(b)))
-      val prev = st.map(_.files).getOrElse(Nil)
-      val txns = st.map(_.txns).getOrElse(Map.empty)
-      txn.foreach { case (appId, tv) =>
-        if (txns.getOrElse(appId, Long.MinValue) >= tv)
-          return None // a racing replay won; our files stay orphaned
+      val base = st.getOrElse(EmptyState)
+      // a racing replay won; our files stay orphaned
+      if (replayed(base, txn)) None
+      else {
+        val unified = evolveSchema(base.schema.getOrElse(new StructType()),
+          dfSchema)
+        // a concurrently-added constraint must gate THIS batch too
+        validated = recheckConstraints(spark, dir, base.constraints,
+          validated, added, Some(unified), op,
+          claim.map(_.colMap).getOrElse(Map.empty))
+        Some(withClaim(base.copy(files = base.files ++ added,
+          txns = base.txns ++ txn, stats = base.stats ++ addedStats,
+          schema = Some(unified), bloomRefs = base.bloomRefs ++ addedRefs,
+          bloomCols = (base.bloomCols ++ addedBloomCols).distinct,
+          sizes = base.sizes ++ addedSizes, bucket = effBucket), claim))
       }
-      val stats = st.map(_.stats).getOrElse(Map.empty)
-      val refs = st.map(_.bloomRefs).getOrElse(Map.empty)
-      val bcols = (st.map(_.bloomCols).getOrElse(Nil) ++ addedBloomCols).distinct
-      val unified = st.flatMap(_.schema)
-        .map(evolveSchema(_, dfSchema))
-        .getOrElse(evolveSchema(new StructType(), dfSchema))
-      // a concurrently-added constraint must gate THIS batch too
-      validated = recheckConstraints(spark, dir,
-        st.map(_.constraints).getOrElse(Map.empty), validated,
-        added, Some(unified), op, claim.map(_.colMap).getOrElse(Map.empty))
-      val v = base.getOrElse(-1L) + 1
-      if (tryCommit(spark, dir, v, prev ++ added,
-          txn.fold(txns)(txns + _), stats ++ addedStats,
-          Some(unified), refs ++ addedRefs, bcols,
-          st.map(_.sizes).getOrElse(Map.empty) ++ addedSizes, op,
-          st.map(_.dvRefs).getOrElse(Map.empty), effBucket,
-          colMapOpt = claim.map(c => (c.colMap, c.retired))))
-        return Some(v)
-      attempt += 1 // lost the race: re-read the new latest and retry
     }
-    throw new java.io.IOException(
-      s"$op: lost the commit race $maxRetries times under $dir")
   }
 
   /** Partition-disciplined append — HIDDEN partitioning (the public
@@ -2751,41 +2727,13 @@ object SnapshotTable {
     val pre = latestVersion(spark, dir)
       .map(manifestTxns(spark, dir, _)).getOrElse(Map.empty)
     if (pre.getOrElse(appId, Long.MinValue) >= txnVersion) return None
-    var validated = enforceConstraints(spark, dir, df, "transactionalAppend")
+    val vcs = enforceConstraints(spark, dir, df, "transactionalAppend")
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
     val wb = writeBatch(df, dir, sCols, bCols, strictBlooms = false)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(spark, dir)
-      val st = base.map(stateOf(spark, dir, _))
-      checkMapClaim(st, wb.claim, "transactionalAppend")
-      val prev = st.map(_.files).getOrElse(Nil)
-      val txns = st.map(_.txns).getOrElse(Map.empty)
-      val stats = st.map(_.stats).getOrElse(Map.empty)
-      val refs = st.map(_.bloomRefs).getOrElse(Map.empty)
-      val bcols = (st.map(_.bloomCols).getOrElse(Nil) ++ wb.bloomCols).distinct
-      if (txns.getOrElse(appId, Long.MinValue) >= txnVersion)
-        return None // a racing replay won; our files stay orphaned
-      val unified = st.flatMap(_.schema)
-        .map(evolveSchema(_, df.schema))
-        .getOrElse(evolveSchema(new StructType(), df.schema))
-      validated = recheckConstraints(spark, dir,
-        st.map(_.constraints).getOrElse(Map.empty), validated,
-        wb.added, Some(unified), "transactionalAppend",
-        wb.claim.map(_.colMap).getOrElse(Map.empty))
-      val v = base.getOrElse(-1L) + 1
-      if (tryCommit(spark, dir, v, prev ++ wb.added,
-          txns + (appId -> txnVersion), stats ++ wb.stats,
-          Some(unified), refs ++ wb.refs, bcols,
-          st.map(_.sizes).getOrElse(Map.empty) ++ wb.sizes,
-          "transactionalAppend",
-          st.map(_.dvRefs).getOrElse(Map.empty),
-          colMapOpt = wb.claim.map(c => (c.colMap, c.retired))))
-        return Some(v)
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"transactionalAppend: lost the commit race $maxRetries times under $dir")
+    commitAppend(spark, dir, df.schema, wb.added, wb.stats, wb.refs,
+      wb.bloomCols, maxRetries, "transactionalAppend",
+      txn = Some(appId -> txnVersion), addedSizes = wb.sizes,
+      validatedConstraints = vcs, claim = wb.claim)
   }
 
   /** Initialize an EMPTY table: one v0 manifest recording `schema`
@@ -2799,8 +2747,8 @@ object SnapshotTable {
     require(schema.nonEmpty, "createEmpty: schema must have columns")
     latestVersion(spark, dir).foreach(v => throw new IllegalStateException(
       s"createEmpty: a snapshot table already exists under $dir (v$v)"))
-    if (!tryCommit(spark, dir, 0L, Nil, schema = Some(schema),
-        op = "create"))
+    if (!tryCommit(spark, dir, 0L, None,
+        EmptyState.copy(schema = Some(schema)), "create"))
       throw new java.io.IOException(
         s"createEmpty: lost the v0 commit race under $dir")
     0L
@@ -2816,22 +2764,12 @@ object SnapshotTable {
   def advanceTxn(spark: SparkSession, dir: String, appId: String,
                  txnVersion: Long, maxRetries: Int = 20): Option[Long] = {
     require(appId.nonEmpty, "advanceTxn: appId must be non-empty")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).getOrElse(
-        throw new java.io.IOException(
-          s"advanceTxn: no committed version under $dir"))
-      val st = stateOf(spark, dir, cur)
-      if (st.txns.getOrElse(appId, Long.MinValue) >= txnVersion) return None
-      if (tryCommit(spark, dir, cur + 1, st.files,
-          st.txns + (appId -> txnVersion), st.stats, st.schema,
-          st.bloomRefs, st.bloomCols, st.sizes, "advanceTxn", st.dvRefs,
-          st.bucket, colMapOpt = Some((st.colMap, st.retired))))
-        return Some(cur + 1)
-      attempt += 1
+    val txn = Some(appId -> txnVersion)
+    commitLoop(spark, dir, "advanceTxn", maxRetries) { st =>
+      val base = headState(st, "advanceTxn", dir)
+      if (replayed(base, txn)) None
+      else Some(base.copy(txns = base.txns ++ txn))
     }
-    throw new java.io.IOException(
-      s"advanceTxn: lost the commit race $maxRetries times under $dir")
   }
 
   // ------------------------------------------------------------------
@@ -3463,12 +3401,12 @@ object SnapshotTable {
     val f = fs(spark, dir)
     val base = latestVersion(spark, dir).getOrElse(
       throw new java.io.IOException(s"compact: no committed version under $dir"))
-    val old = manifestFiles(spark, dir, base)
+    val baseSt = stateOf(spark, dir, base)
+    val old = baseSt.files
     if (old.isEmpty) return None
-    val baseSizes = stateOf(spark, dir, base).sizes
     // Manifest sizes when recorded (every writer since r7); RPC
     // fallback per legacy file.
-    val totalBytes = old.map(p => baseSizes.getOrElse(p,
+    val totalBytes = old.map(p => baseSt.sizes.getOrElse(p,
       f.getFileStatus(new Path(dir, p)).getLen)).sum
     val nTarget = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     if (old.length <= nTarget && clusterBy.isEmpty && zOrderBy.isEmpty &&
@@ -3477,26 +3415,24 @@ object SnapshotTable {
     // Column mapping: layout columns arrive LOGICAL (they drive
     // repartition/sort on the logical frame below); the recorded
     // stats/bloom tracking is PHYSICAL — translate before merging.
-    val cm = stateOf(spark, dir, base).colMap
-    val cRet = stateOf(spark, dir, base).retired
+    val cm = baseSt.colMap
+    val cRet = baseSt.retired
     require(bucketBy.isEmpty || (cm.isEmpty && cRet.isEmpty),
       "compact(bucketBy): not supported on a column-mapped table — " +
         "the bucketed writer derives file layout from column names; " +
         "drop the mapping (recreate the table) or skip bucketing")
     val trackedCols =
-      (manifestStats(spark, dir, base).values.flatMap(_.keys).toSeq ++
+      (baseSt.stats.values.flatMap(_.keys).toSeq ++
         (clusterBy ++ zOrderBy ++ bucketBy ++ bucketSortBy)
           .map(physName(cm, _))).distinct
-    val trackedBlooms = stateOf(spark, dir, base).bloomCols
+    val trackedBlooms = baseSt.bloomCols
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
     // Deletion vectors applied: the rewrite MATERIALIZES merge-on-read
     // deletes — compaction is also the vector-purge operation.
-    val baseDv = stateOf(spark, dir, base).dvRefs
-    val src = readFilesWithDv(spark, dir, old,
-      manifestSchema(spark, dir, base), baseDv,
-      stateOf(spark, dir, base).colMap,
-      stateOf(spark, dir, base).defaults)
+    val baseDv = baseSt.dvRefs
+    val src = readFilesWithDv(spark, dir, old, baseSt.schema, baseDv, cm,
+      baseSt.defaults)
     val bucketLayout = if (bucketBy.isEmpty) None
       else Some(BucketLayout(numBuckets, bucketBy, bucketSortBy))
     bucketLayout match {
@@ -3526,23 +3462,18 @@ object SnapshotTable {
             col(c).as(physName(cm, c))).toSeq: _*)
         internalWrite(laidPhys, batchDir.toString)
     }
-    val rewritten = f.listStatus(batchDir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => s"data/$batch/${s.getPath.getName}")
     val rewrittenList = f.listStatus(batchDir).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    val rewrittenSizes = rewrittenList.map(st =>
-      s"data/$batch/${st.getPath.getName}" -> st.getLen).toMap
+    val rewritten = rewrittenList.map(st => s"data/$batch/${st.getPath.getName}")
+    val rewrittenSizes = rewritten.zip(rewrittenList.map(_.getLen)).toMap
     // strict=false: trackedBlooms is the table's RECORDED column list,
     // which on a pre-r7 table may include since-rejected types —
     // compaction must complete, dropping those bitsets, not throw.
     val (rewrittenStats, rwBlooms) = summarizeBatch(spark, dir, batchDir,
       rewrittenList, trackedCols, trackedBlooms, strictBlooms = false)
     val rewrittenRefs = writeBloomSidecar(spark, dir, batch, rwBlooms)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val curSt = stateOf(spark, dir, cur)
+    commitLoop(spark, dir, "compact", maxRetries) { st =>
+      val curSt = headState(st, "compact", dir)
       if (curSt.colMap != cm || curSt.retired != cRet)
         throw new java.util.ConcurrentModificationException(
           "compact: the table's column mapping changed during the " +
@@ -3564,19 +3495,11 @@ object SnapshotTable {
       // (and any prior claim clears: this rewrite renamed files).
       val effBucket = bucketLayout.filter(_ =>
         next.toSet == rewritten.toSet)
-      if (tryCommit(spark, dir, cur + 1, next,
-          curSt.txns,
-          curSt.stats ++ rewrittenStats,
-          curSt.schema,
-          curSt.bloomRefs ++ rewrittenRefs,
-          curSt.bloomCols,
-          curSt.sizes ++ rewrittenSizes, "compact",
-          curSt.dvRefs -- old, effBucket))
-        return Some(cur + 1)
-      attempt += 1
+      Some(curSt.copy(files = next, stats = curSt.stats ++ rewrittenStats,
+        bloomRefs = curSt.bloomRefs ++ rewrittenRefs,
+        sizes = curSt.sizes ++ rewrittenSizes, dvRefs = curSt.dvRefs -- old,
+        bucket = effBucket))
     }
-    throw new java.io.IOException(
-      s"compact: lost the commit race $maxRetries times under $dir")
   }
 
   /** SCOPED compaction — the public `OPTIMIZE … WHERE` shape: rewrite
@@ -3756,11 +3679,13 @@ object SnapshotTable {
     // initial defaults for its referenced files
     val defaults = st.defaults.map { case (c, (dv, pre)) =>
       c -> (dv, pre.map(absolutize)) }
-    if (!tryCommit(spark, dstDir, 0L, files, Map.empty, stats, st.schema,
-        refs, st.bloomCols, sizes, "clone", dvRefs,
-        colMapOpt = Some((st.colMap, st.retired)),
-        propsOpt = Some(st.props),
-        defaultsOpt = Some(defaults)))
+    // a new table: schema, tracking, mapping, properties and defaults
+    // come along; the ledger, the bucket claim and CHECK constraints
+    // start empty
+    if (!tryCommit(spark, dstDir, 0L, None, st.copy(files = files,
+        txns = Map.empty, stats = stats, bloomRefs = refs, sizes = sizes,
+        dvRefs = dvRefs, bucket = None, constraints = Map.empty,
+        defaults = defaults), "clone"))
       throw new java.io.IOException(
         s"shallowClone: destination $dstDir committed concurrently")
     0L
@@ -3802,22 +3727,13 @@ object SnapshotTable {
     if (bad.nonEmpty) throw new IllegalArgumentException(
       s"addConstraint: existing rows violate $name ($exprSql), e.g. " +
         bad.head.mkString(","))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
-      require(!st.constraints.contains(name),
+    commitLoop(spark, dir, "addConstraint", maxRetries) { st =>
+      val base = headState(st, "addConstraint", dir)
+      require(!base.constraints.contains(name),
         s"addConstraint: constraint $name already exists " +
-          s"(${st.constraints(name)})")
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          st.schema, st.bloomRefs, st.bloomCols, st.sizes,
-          "addConstraint", st.dvRefs, st.bucket,
-          Some(st.constraints + (name -> exprSql))))
-        return cur + 1
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"addConstraint: lost the commit race $maxRetries times under $dir")
+          s"(${base.constraints(name)})")
+      Some(base.copy(constraints = base.constraints + (name -> exprSql)))
+    }.get
   }
 
   /** Drop a recorded CHECK constraint. Returns the committed
@@ -3829,19 +3745,10 @@ object SnapshotTable {
         s"dropConstraint: no committed version under $dir"))
     require(stateOf(spark, dir, base).constraints.contains(name),
       s"dropConstraint: no such constraint $name")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          st.schema, st.bloomRefs, st.bloomCols, st.sizes,
-          "dropConstraint", st.dvRefs, st.bucket,
-          Some(st.constraints - name)))
-        return cur + 1
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"dropConstraint: lost the commit race $maxRetries times under $dir")
+    commitLoop(spark, dir, "dropConstraint", maxRetries) { st =>
+      val base = headState(st, "dropConstraint", dir)
+      Some(base.copy(constraints = base.constraints - name))
+    }.get
   }
 
   // ------------------------------------------------------------------
@@ -3884,24 +3791,11 @@ object SnapshotTable {
 
   private def commitProps(spark: SparkSession, dir: String,
                           f: Map[String, String] => Map[String, String],
-                          op: String, maxRetries: Int): Long = {
-    latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(s"$op: no committed version under $dir"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          st.schema, st.bloomRefs, st.bloomCols, st.sizes, op,
-          st.dvRefs, st.bucket,
-          colMapOpt = Some((st.colMap, st.retired)),
-          propsOpt = Some(f(st.props))))
-        return cur + 1
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"$op: lost the commit race $maxRetries times under $dir")
-  }
+                          op: String, maxRetries: Int): Long =
+    commitLoop(spark, dir, op, maxRetries) { st =>
+      val base = headState(st, op, dir)
+      Some(base.copy(props = f(base.props)))
+    }.get
 
   // ------------------------------------------------------------------
   // Column mapping admin ops (metadata-only RENAME / DROP COLUMN)
@@ -3947,13 +3841,8 @@ object SnapshotTable {
                    to: String, maxRetries: Int = 20): Long = {
     require(to.nonEmpty, "renameColumn: target name must be non-empty")
     require(from != to, s"renameColumn: $from -> $to is a no-op")
-    latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"renameColumn: no committed version under $dir"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
+    commitLoop(spark, dir, "renameColumn", maxRetries) { head =>
+      val st = headState(head, "renameColumn", dir)
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"renameColumn: table under $dir records no schema (legacy " +
           "manifest) — append once to record one, then rename"))
@@ -3975,15 +3864,9 @@ object SnapshotTable {
       val newBucket = st.bucket.map(b => b.copy(
         cols = b.cols.map(c => if (c == from) to else c),
         sortCols = b.sortCols.map(c => if (c == from) to else c)))
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          Some(newSchema), st.bloomRefs, st.bloomCols, st.sizes,
-          "renameColumn", st.dvRefs, newBucket,
-          colMapOpt = Some((newMap, st.retired))))
-        return cur + 1
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"renameColumn: lost the commit race $maxRetries times under $dir")
+      Some(st.copy(schema = Some(newSchema), bucket = newBucket,
+        colMap = newMap))
+    }.get
   }
 
   /** METADATA-ONLY type widening (`ALTER COLUMN … TYPE`, the public
@@ -4026,10 +3909,8 @@ object SnapshotTable {
         s"addColumn: default '$str' does not cast to ${dt.simpleString}")
       str
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
+    commitLoop(spark, dir, "addColumn", maxRetries) { head =>
+      val st = headState(head, "addColumn", dir)
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"addColumn: table under $dir records no schema (legacy " +
           "manifest) — append once to record one, then add"))
@@ -4041,37 +3922,24 @@ object SnapshotTable {
         StructField(column, dt, nullable = true))
       // mapped tables: route the new logical name through the same
       // fresh-physical discipline as append-evolution
-      val colMapOpt =
-        if (st.colMap.isEmpty && st.retired.isEmpty)
-          Some((st.colMap, st.retired))
+      val newMap =
+        if (st.colMap.isEmpty && st.retired.isEmpty) st.colMap
         else {
           val taken = schema.fieldNames
             .map(physName(st.colMap, _)).toSet ++ st.retired
           val p = freshPhys(column, taken)
-          val m = if (p != column) st.colMap + (column -> p) else st.colMap
-          Some((m, st.retired))
+          if (p != column) st.colMap + (column -> p) else st.colMap
         }
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          Some(newSchema), st.bloomRefs, st.bloomCols, st.sizes,
-          "addColumn", st.dvRefs, st.bucket, colMapOpt = colMapOpt,
-          defaultsOpt = defStr.map(d =>
-            st.defaults + (column -> (d, st.files.toSet)))))
-        return cur + 1
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"addColumn: lost the commit race $maxRetries times under $dir")
+      Some(st.copy(schema = Some(newSchema), colMap = newMap,
+        defaults = st.defaults ++
+          defStr.map(d => column -> (d, st.files.toSet))))
+    }.get
   }
 
   def widenColumn(spark: SparkSession, dir: String, column: String,
-                  to: DataType, maxRetries: Int = 20): Long = {
-    latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"widenColumn: no committed version under $dir"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
+                  to: DataType, maxRetries: Int = 20): Long =
+    commitLoop(spark, dir, "widenColumn", maxRetries) { head =>
+      val st = headState(head, "widenColumn", dir)
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"widenColumn: table under $dir records no schema (legacy " +
           "manifest) — append once to record one, then widen"))
@@ -4094,16 +3962,8 @@ object SnapshotTable {
           "the bucket layout first")
       val newSchema = StructType(schema.fields.map(f =>
         if (f.name == column) f.copy(dataType = to) else f))
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          Some(newSchema), st.bloomRefs, st.bloomCols, st.sizes,
-          "widenColumn", st.dvRefs, st.bucket,
-          colMapOpt = Some((st.colMap, st.retired))))
-        return cur + 1
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"widenColumn: lost the commit race $maxRetries times under $dir")
-  }
+      Some(st.copy(schema = Some(newSchema)))
+    }.get
 
   /** METADATA-ONLY column drop: one manifest commit removes the
     * column from the logical schema and RETIRES its physical name —
@@ -4119,14 +3979,9 @@ object SnapshotTable {
     * longer be asserted over the visible schema). Returns the
     * committed version. */
   def dropColumn(spark: SparkSession, dir: String, column: String,
-                 maxRetries: Int = 20): Long = {
-    latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"dropColumn: no committed version under $dir"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
+                 maxRetries: Int = 20): Long =
+    commitLoop(spark, dir, "dropColumn", maxRetries) { head =>
+      val st = headState(head, "dropColumn", dir)
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"dropColumn: table under $dir records no schema (legacy " +
           "manifest) — append once to record one, then drop"))
@@ -4146,17 +4001,10 @@ object SnapshotTable {
       val newSchema = StructType(schema.fields.filterNot(_.name == column))
       val newBucket = st.bucket.filterNot(b =>
         b.cols.contains(column) || b.sortCols.contains(column))
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          Some(newSchema), st.bloomRefs,
-          st.bloomCols.filterNot(_ == phys), st.sizes,
-          "dropColumn", st.dvRefs, newBucket,
-          colMapOpt = Some((newMap, newRetired))))
-        return cur + 1
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"dropColumn: lost the commit race $maxRetries times under $dir")
-  }
+      Some(st.copy(schema = Some(newSchema),
+        bloomCols = st.bloomCols.filterNot(_ == phys), bucket = newBucket,
+        colMap = newMap, retired = newRetired))
+    }.get
 
   /** Enforce the table's recorded CHECK constraints on a batch (or a
     * rewrite that can introduce new values) BEFORE it lands: one
@@ -4256,52 +4104,45 @@ object SnapshotTable {
               maxRetries: Int = 20): Option[Long] = {
     val f = fs(spark, dir)
     val target = stateOf(spark, dir, toVersion) // throws once vacuumed
-    val targetSchema = manifestSchema(spark, dir, toVersion)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).getOrElse(
-        throw new java.io.IOException(
-          s"restore: no committed version under $dir"))
-      require(toVersion <= cur,
-        s"restore: target v$toVersion is beyond the head v$cur")
-      val curSt = stateOf(spark, dir, cur)
+    val cur = latestVersion(spark, dir).getOrElse(
+      throw new java.io.IOException(
+        s"restore: no committed version under $dir"))
+    require(toVersion <= cur,
+      s"restore: target v$toVersion is beyond the head v$cur")
+    commitLoop(spark, dir, "restore", maxRetries) { head =>
+      val curSt = headState(head, "restore", dir)
       // The no-op check covers exactly the state a restore REINSTATES
       // (files, vectors, schema, mapping, bucket). Constraints/props
       // deliberately inherit FORWARD from the current head (policy
       // survives rollback), so they must not participate here — a
       // head differing from the target only in constraints would
       // otherwise commit a version identical to itself.
-      if (curSt.files.toSet == target.files.toSet &&
-          curSt.dvRefs == target.dvRefs &&
-          manifestSchema(spark, dir, cur) == targetSchema &&
-          curSt.colMap == target.colMap &&
-          curSt.retired == target.retired &&
-          curSt.defaults == target.defaults &&
-          curSt.bucket == target.bucket) return None
-      val gone = target.files.filterNot(curSt.files.toSet)
-        .filterNot { p =>
-          f.exists(if (p.startsWith("data/")) new Path(dir, p)
-                   else new Path(p))
-        }
-      if (gone.nonEmpty) throw new java.io.IOException(
-        s"restore: v$toVersion data files already vacuumed: " +
-          gone.take(3).mkString(", "))
-      if (tryCommit(spark, dir, cur + 1, target.files, curSt.txns,
-          target.stats, targetSchema, target.bloomRefs,
-          target.bloomCols, target.sizes, "restore", target.dvRefs,
-          target.bucket,
-          // the TARGET's column mapping reinstates with its state — a
-          // restore across a rename/drop rolls the names back too
-          // (explicit empty = clear, for pre-mapping targets);
-          // column defaults are schema-adjacent structure and roll
-          // back the same way
-          colMapOpt = Some((target.colMap, target.retired)),
-          defaultsOpt = Some(target.defaults)))
-        return Some(cur + 1)
-      attempt += 1
+      val unchanged = curSt.files.toSet == target.files.toSet &&
+        curSt.dvRefs == target.dvRefs &&
+        curSt.schema == target.schema &&
+        curSt.colMap == target.colMap &&
+        curSt.retired == target.retired &&
+        curSt.defaults == target.defaults &&
+        curSt.bucket == target.bucket
+      if (unchanged) None
+      else {
+        val gone = target.files.filterNot(curSt.files.toSet)
+          .filterNot { p =>
+            f.exists(if (p.startsWith("data/")) new Path(dir, p)
+                     else new Path(p))
+          }
+        if (gone.nonEmpty) throw new java.io.IOException(
+          s"restore: v$toVersion data files already vacuumed: " +
+            gone.take(3).mkString(", "))
+        // The target's state reinstates whole — files, vectors, schema,
+        // bucket claim, its column mapping (a restore across a
+        // rename/drop rolls the names back too) and column defaults
+        // (schema-adjacent structure) — while the ledger and table
+        // policy carry forward from the head.
+        Some(target.copy(txns = curSt.txns,
+          constraints = curSt.constraints, props = curSt.props))
+      }
     }
-    throw new java.io.IOException(
-      s"restore: lost the commit race $maxRetries times under $dir")
   }
 
   /** Retire data files referenced by NO manifest among the latest
@@ -4430,18 +4271,13 @@ object SnapshotTable {
         // delta-form manifest asserted/inherited; omitting either
         // would silently strip table policy at the keepFrom version.
         val origTs = Option(node.get("ts")).map(_.asLong)
-        val body = manifestBody(spark, dir, keepFrom, full = true,
-          st.files, st.txns, st.stats, st.schema, st.bloomRefs, st.bloomCols,
-          st.sizes, origOp, st.dvRefs, st.bucket, st.constraints,
-          tsOverride = origTs,
+        // The parent is read only for segment reuse.
+        val parent = scala.util.Try(stateOf(spark, dir, keepFrom - 1)).toOption
+        val body = manifestBody(spark, dir, keepFrom, parent, st,
+          full = true, origOp, tsOverride = origTs,
           // a legacy stampless manifest stays stampless — see
           // manifestBody's ts discipline
-          stampTs = origTs.isDefined,
-          // the column mapping is table state like bucket/constraints
-          // — stripping it here would serve physical names (or
-          // resurrect dropped columns) at the keepFrom version
-          colMap = st.colMap, retired = st.retired,
-          props = st.props, defaults = st.defaults)
+          stampTs = origTs.isDefined)
         commitLock.synchronized {
           // Rename OVER the target (POSIX/local rename overwrites in
           // place — no instant at which v<keepFrom> is missing for a
@@ -4746,10 +4582,9 @@ object SnapshotTable {
     labeled(spark, "delete-mor:vector-write") {
       internalWrite(vector, new Path(dir, ref).toString)
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val curSt = stateOf(spark, dir, cur)
+    commitLoop(spark, dir, "deleteWhereMor", maxRetries,
+        recordAs = Some("deleteMor")) { head =>
+      val curSt = headState(head, "deleteWhereMor", dir)
       val missing = affected.filterNot(curSt.files.toSet)
       if (missing.nonEmpty)
         throw new java.util.ConcurrentModificationException(
@@ -4761,15 +4596,9 @@ object SnapshotTable {
         throw new java.util.ConcurrentModificationException(
           s"deleteWhereMor: deletion vectors advanced concurrently on " +
             s"${dvMoved.take(3).mkString(", ")}")
-      if (tryCommit(spark, dir, cur + 1, curSt.files, curSt.txns,
-          curSt.stats, curSt.schema, curSt.bloomRefs, curSt.bloomCols,
-          curSt.sizes, "deleteMor",
-          curSt.dvRefs ++ affected.map(_ -> ref)))
-        return Some(cur + 1)
-      attempt += 1
+      Some(curSt.copy(dvRefs = curSt.dvRefs ++ affected.map(_ -> ref),
+        bucket = None))
     }
-    throw new java.io.IOException(
-      s"deleteWhereMor: lost the commit race $maxRetries times under $dir")
     } finally matches.unpersist(false)
   }
 
@@ -4846,10 +4675,9 @@ object SnapshotTable {
     labeled(spark, "update-mor:vector-write") {
       internalWrite(vector, new Path(dir, ref).toString)
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val curSt = stateOf(spark, dir, cur)
+    commitLoop(spark, dir, "updateWhereMor", maxRetries,
+        recordAs = Some("updateMor")) { head =>
+      val curSt = headState(head, "updateWhereMor", dir)
       checkMapClaim(Some(curSt), wb.claim, "updateWhereMor")
       val missing = affected.filterNot(curSt.files.toSet)
       if (missing.nonEmpty)
@@ -4868,17 +4696,14 @@ object SnapshotTable {
       validated = recheckConstraints(spark, dir, curSt.constraints,
         validated, wb.added, nextSchema, "updateWhereMor",
         wb.claim.map(_.colMap).getOrElse(Map.empty))
-      if (tryCommit(spark, dir, cur + 1, curSt.files ++ wb.added,
-          curSt.txns, curSt.stats ++ wb.stats, nextSchema,
-          curSt.bloomRefs ++ wb.refs, (curSt.bloomCols ++ wb.bloomCols).distinct,
-          curSt.sizes ++ wb.sizes, "updateMor",
-          curSt.dvRefs ++ affected.map(_ -> ref),
-          colMapOpt = wb.claim.map(c => (c.colMap, c.retired))))
-        return Some(cur + 1)
-      attempt += 1
+      Some(withClaim(curSt.copy(files = curSt.files ++ wb.added,
+        stats = curSt.stats ++ wb.stats, schema = nextSchema,
+        bloomRefs = curSt.bloomRefs ++ wb.refs,
+        bloomCols = (curSt.bloomCols ++ wb.bloomCols).distinct,
+        sizes = curSt.sizes ++ wb.sizes,
+        dvRefs = curSt.dvRefs ++ affected.map(_ -> ref), bucket = None),
+        wb.claim))
     }
-    throw new java.io.IOException(
-      s"updateWhereMor: lost the commit race $maxRetries times under $dir")
     } finally matches.unpersist(false)
   }
 
@@ -5572,83 +5397,69 @@ object SnapshotTable {
     // None = this op introduces no new values (delete/compaction);
     // Some(v) = the set the caller validated — recheck on rebase.
     var validated = checkConstraints
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir)
-      val curSt = cur.map(stateOf(spark, dir, _))
-      checkMapClaim(curSt, claim, op)
-      val curFiles = curSt.map(_.files).getOrElse(Nil)
-      val curTxns = curSt.map(_.txns).getOrElse(Map.empty)
-      txn.foreach { case (appId, tv) =>
-        if (curTxns.getOrElse(appId, Long.MinValue) >= tv)
-          return None // a racing replay won; our files stay orphaned
-      }
-      val guarded = touched ++ readOnly
-      val missing = guarded.filterNot(curFiles.toSet)
-      if (missing.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"$op: touched/read files rewritten concurrently: ${missing.take(3).mkString(", ")}")
-      // A deletion vector committed on a touched file AFTER our base
-      // read means our rewrite (built from the base vector state)
-      // would resurrect those freshly-deleted rows — same write-write
-      // conflict as a vanished file, same loud surface. Read-only
-      // decision inputs (insert-suppression holders) get the same
-      // guard: their rows decided what this commit suppresses.
-      val dvMoved = guarded.filter(f =>
-        curSt.map(_.dvRefs).getOrElse(Map.empty).get(f) != baseDv.get(f))
-      if (dvMoved.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"$op: deletion vectors advanced concurrently on touched " +
-            s"files: ${dvMoved.take(3).mkString(", ")}")
-      keyConflict.foreach { case (baseFiles, keys, srcKeys) =>
-        val newSinceBase = curFiles
-          .filterNot(baseFiles).filterNot(addedSet).filterNot(touchedSet)
-        if (newSinceBase.nonEmpty) {
-          // keys are logical; concurrently-added files are physical —
-          // probe through the rename under an active mapping.
-          val cm = claim.map(_.colMap).getOrElse(Map.empty)
-          val probeFrame =
-            if (cm.isEmpty) readFiles(spark, dir, newSinceBase,
-              curSt.flatMap(_.schema))
-            else {
-              val logical = curSt.flatMap(_.schema).getOrElse(
-                throw new IllegalStateException(
-                  s"$op: column mapping active under $dir but no schema"))
-              toLogicalFrame(readFiles(spark, dir, newSinceBase,
-                Some(physSchemaOf(cm, logical))), cm, logical)
-            }
-          val clash = probeFrame
-            .join(srcKeys, keys, "left_semi").limit(1).collect()
-          if (clash.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"$op: a concurrent commit added rows for key " +
-                s"${clash.head.mkString(",")} — committing would duplicate it")
+    commitLoop(spark, dir, op, maxRetries) { head =>
+      checkMapClaim(head, claim, op)
+      val curSt = head.getOrElse(EmptyState)
+      // a racing replay won; our files stay orphaned
+      if (replayed(curSt, txn)) None
+      else {
+        val guarded = touched ++ readOnly
+        val missing = guarded.filterNot(curSt.files.toSet)
+        if (missing.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"$op: touched/read files rewritten concurrently: " +
+              missing.take(3).mkString(", "))
+        // A deletion vector committed on a touched file AFTER our base
+        // read means our rewrite (built from the base vector state)
+        // would resurrect those freshly-deleted rows — same write-write
+        // conflict as a vanished file, same loud surface. Read-only
+        // decision inputs (insert-suppression holders) get the same
+        // guard: their rows decided what this commit suppresses.
+        val dvMoved = guarded.filter(f => curSt.dvRefs.get(f) != baseDv.get(f))
+        if (dvMoved.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"$op: deletion vectors advanced concurrently on touched " +
+              s"files: ${dvMoved.take(3).mkString(", ")}")
+        keyConflict.foreach { case (baseFiles, keys, srcKeys) =>
+          val newSinceBase = curSt.files
+            .filterNot(baseFiles).filterNot(addedSet).filterNot(touchedSet)
+          if (newSinceBase.nonEmpty) {
+            // keys are logical; concurrently-added files are physical —
+            // probe through the rename under an active mapping.
+            val cm = claim.map(_.colMap).getOrElse(Map.empty)
+            val probeFrame =
+              if (cm.isEmpty) readFiles(spark, dir, newSinceBase, curSt.schema)
+              else {
+                val logical = curSt.schema.getOrElse(
+                  throw new IllegalStateException(
+                    s"$op: column mapping active under $dir but no schema"))
+                toLogicalFrame(readFiles(spark, dir, newSinceBase,
+                  Some(physSchemaOf(cm, logical))), cm, logical)
+              }
+            val clash = probeFrame
+              .join(srcKeys, keys, "left_semi").limit(1).collect()
+            if (clash.nonEmpty)
+              throw new java.util.ConcurrentModificationException(
+                s"$op: a concurrent commit added rows for key " +
+                  s"${clash.head.mkString(",")} — committing would duplicate it")
+          }
         }
+        val schema = Some(evolveSchema(curSt.schema.getOrElse(new StructType()),
+          rewrite.schema))
+        validated = validated.map(v => recheckConstraints(spark, dir,
+          curSt.constraints, v, added, schema, op,
+          claim.map(_.colMap).getOrElse(Map.empty)))
+        // rewritten files physically exclude their masked rows, so
+        // their vectors retire with them
+        Some(withClaim(curSt.copy(
+          files = curSt.files.filterNot(touchedSet) ++ added,
+          txns = curSt.txns ++ txn,
+          stats = (curSt.stats -- touched) ++ addedStats, schema = schema,
+          bloomRefs = (curSt.bloomRefs -- touched) ++ addedRefs,
+          bloomCols = (curSt.bloomCols ++ wb.bloomCols).distinct,
+          sizes = (curSt.sizes -- touched) ++ addedSizes,
+          dvRefs = curSt.dvRefs -- touched, bucket = None), claim))
       }
-      val schema = Some(curSt.flatMap(_.schema)
-        .map(evolveSchema(_, rewrite.schema))
-        .getOrElse(evolveSchema(new StructType(), rewrite.schema)))
-      validated = validated.map(v => recheckConstraints(spark, dir,
-        curSt.map(_.constraints).getOrElse(Map.empty), v,
-        added, schema, op, claim.map(_.colMap).getOrElse(Map.empty)))
-      val next = curFiles.filterNot(touchedSet) ++ added
-      if (tryCommit(spark, dir, cur.getOrElse(-1L) + 1, next,
-          txn.fold(curTxns)(curTxns + _),
-          (curSt.map(_.stats).getOrElse(Map.empty) -- touched) ++ addedStats,
-          schema,
-          (curSt.map(_.bloomRefs).getOrElse(Map.empty) -- touched)
-            ++ addedRefs,
-          (curSt.map(_.bloomCols).getOrElse(Nil) ++ wb.bloomCols).distinct,
-          (curSt.map(_.sizes).getOrElse(Map.empty) -- touched) ++ addedSizes,
-          op,
-          // rewritten files physically exclude their masked rows, so
-          // their vectors retire with them
-          curSt.map(_.dvRefs).getOrElse(Map.empty) -- touched,
-          colMapOpt = claim.map(c => (c.colMap, c.retired))))
-        return Some(cur.getOrElse(-1L) + 1)
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"$op: lost the commit race $maxRetries times under $dir")
   }
 }

@@ -81,6 +81,140 @@ class SnapshotOpsSpec extends AnyFunSuite {
       SnapshotTable.latestVersion(spark, dir).get).contains("nonneg"))
   }
 
+  /** The table metadata a commit either carries forward, replaces or
+    * clears: CHECK constraints, properties, column mapping, column
+    * defaults, the bucketing claim and the txn ledger. */
+  private case class Policy(
+      constraints: Map[String, String], props: Map[String, String],
+      colMap: Map[String, String], retired: Seq[String],
+      defaults: Map[String, (String, Set[String])],
+      bucket: Option[SnapshotTable.BucketLayout], txns: Map[String, Long])
+
+  private def policy(dir: String, v: Long): Policy = Policy(
+    SnapshotTable.manifestConstraints(spark, dir, v),
+    SnapshotTable.manifestProps(spark, dir, v),
+    SnapshotTable.manifestColMap(spark, dir, v),
+    SnapshotTable.manifestRetired(spark, dir, v),
+    SnapshotTable.manifestDefaults(spark, dir, v),
+    SnapshotTable.manifestBucket(spark, dir, v),
+    SnapshotTable.manifestTxns(spark, dir, v))
+
+  /** An independent copy of a table directory (manifests reference
+    * data files relative to the table root). */
+  private def copyTable(src: String): String = {
+    val dst = tmp("policy-copy")
+    val s = java.nio.file.Paths.get(src)
+    val d = java.nio.file.Paths.get(dst)
+    val it = Files.walk(s).iterator()
+    while (it.hasNext) {
+      val p = it.next()
+      Files.copy(p, d.resolve(s.relativize(p)),
+        java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+    }
+    dst
+  }
+
+  test("every commit kind carries, replaces or clears table policy per its contract") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    import SnapshotTable.{MergeAction, MergeClause}
+    // base: bucketed, one constraint, one property, one ledger entry,
+    // one defaulted column, one rename and one dropped column
+    val base = tmp("policy-base")
+    SnapshotTable.appendBucketed(spark.range(0, 40).select($"id",
+      ($"id" % 4).as("k"), concat(lit("s"), $"id").as("s"),
+      ($"id" % 3).cast("int").as("w"), lit(1L).as("x")),
+      base, Seq("k"), 2)                                             // v0
+    SnapshotTable.addConstraint(spark, base, "nonneg", "id >= 0")     // v1
+    SnapshotTable.setProperties(spark, base, Map("p" -> "1"))         // v2
+    SnapshotTable.advanceTxn(spark, base, "app", 5L)                  // v3
+    SnapshotTable.addColumn(spark, base, "d", LongType,
+      default = Some(7L))                                             // v4
+    SnapshotTable.renameColumn(spark, base, "s", "s2")                // v5
+    SnapshotTable.dropColumn(spark, base, "x")                        // v6
+    val p0 = policy(base, 0L)
+    val p = policy(base, 6L)
+    assert(p.constraints == Map("nonneg" -> "id >= 0"))
+    assert(p.props == Map("p" -> "1") && p.txns == Map("app" -> 5L))
+    assert(p.colMap == Map("s2" -> "s") && p.retired == Seq("x"))
+    assert(p.defaults.keySet == Set("d") && p.bucket.nonEmpty)
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).select($"id",
+      ($"id" % 4).as("k"), concat(lit("s"), $"id").as("s2"),
+      lit(1).as("w"), lit(9L).as("d"))
+    // defaults only ever shrink to the commit's live files
+    def live(q: Policy, dir: String, v: Long): Policy = {
+      val files = SnapshotTable.manifestFiles(spark, dir, v).toSet
+      q.copy(defaults = q.defaults
+        .map { case (c, (dv, pre)) => c -> (dv, pre.intersect(files)) }
+        .filter(_._2._2.nonEmpty))
+    }
+    val cases: Seq[(String, String => Unit, (String, Long) => Policy)] = Seq(
+      ("append", d => SnapshotTable.append(rows(100, 110), d),
+        (d, v) => live(p, d, v).copy(bucket = None)),
+      ("overwrite", d => SnapshotTable.overwrite(rows(100, 110), d),
+        (d, v) => p.copy(defaults = Map.empty, bucket = None)),
+      ("transactionalAppend", d => SnapshotTable.transactionalAppend(
+          rows(100, 110), d, "app2", 1L),
+        (d, v) => p.copy(bucket = None, txns = p.txns + ("app2" -> 1L))),
+      ("advanceTxn", d => SnapshotTable.advanceTxn(spark, d, "app", 6L),
+        (d, v) => p.copy(txns = Map("app" -> 6L))),
+      ("compact", d => SnapshotTable.compact(spark, d,
+          clusterBy = Seq("id")),
+        (d, v) => p.copy(defaults = Map.empty, bucket = None)),
+      ("deleteWhere", d => SnapshotTable.deleteWhere(spark, d, $"id" === 0L),
+        (d, v) => live(p, d, v).copy(bucket = None)),
+      ("deleteWhereMor", d => SnapshotTable.deleteWhereMor(spark, d,
+          $"id" === 0L),
+        (d, v) => p.copy(bucket = None)),
+      ("mergeInto", d => SnapshotTable.mergeInto(spark, d, rows(1, 2),
+          Seq("id"), matched = Seq(MergeClause(None, MergeAction.UpdateAll))),
+        (d, v) => live(p, d, v).copy(bucket = None)),
+      // structure rolls back; policy and the ledger carry forward
+      ("restore", d => SnapshotTable.restore(spark, d, 0L),
+        (d, v) => p0.copy(constraints = p.constraints, props = p.props,
+          txns = p.txns)),
+      ("setProperties", d => SnapshotTable.setProperties(spark, d,
+          Map("q" -> "2")),
+        (d, v) => p.copy(props = p.props + ("q" -> "2"))),
+      ("addColumn DEFAULT", d => SnapshotTable.addColumn(spark, d, "e",
+          IntegerType, default = Some(3)),
+        (d, v) => p.copy(defaults = p.defaults + ("e" ->
+          ("3", SnapshotTable.manifestFiles(spark, d, v).toSet)))),
+      ("widenColumn", d => SnapshotTable.widenColumn(spark, d, "w", LongType),
+        (d, v) => p),
+      ("renameColumn", d => SnapshotTable.renameColumn(spark, d, "k", "k2"),
+        (d, v) => p.copy(colMap = p.colMap + ("k2" -> "k"),
+          bucket = p.bucket.map(b => b.copy(cols = Seq("k2"))))),
+      ("dropColumn", d => SnapshotTable.dropColumn(spark, d, "s2"),
+        (d, v) => p.copy(colMap = Map.empty, retired = Seq("x", "s"))))
+    cases.foreach { case (kind, op, expected) =>
+      val d = copyTable(base)
+      op(d)
+      val v = SnapshotTable.latestVersion(spark, d).get
+      assert(v == 7L, s"$kind did not commit")
+      assert(policy(d, v) == expected(d, v), s"$kind")
+    }
+    // shallowClone: a new table — props, mapping and defaults (their
+    // file keys absolutized) come along; constraints, the bucket claim
+    // and the ledger do not
+    val src = copyTable(base)
+    val clone = tmp("policy-clone")
+    SnapshotTable.shallowClone(spark, src, clone)
+    def abs(e: String) = new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(src), e).toUri.getPath
+    assert(policy(clone, 0L) == p.copy(constraints = Map.empty,
+      defaults = p.defaults.map { case (c, (dv, pre)) =>
+        c -> (dv, pre.map(abs)) },
+      bucket = None, txns = Map.empty))
+    // vacuum: no new version; the rewritten keepFrom manifest keeps
+    // every piece of policy
+    val vac = copyTable(base)
+    val p5 = policy(vac, 5L)
+    SnapshotTable.vacuum(spark, vac, keepVersions = 2)
+    assert(SnapshotTable.latestVersion(spark, vac).contains(6L))
+    assert(policy(vac, 5L) == p5 && policy(vac, 6L) == p)
+    intercept[java.io.IOException](policy(vac, 4L))
+  }
+
   test("restore: deletion vectors roll back and the txn ledger carries forward") {
     val dir = tmp("restore-dv")
     SnapshotTable.append(spark.range(0, 40).toDF(), dir)      // v0
