@@ -63,9 +63,8 @@ object Scd2 {
     val srcV = SnapshotTable.latestVersion(spark, srcDir).getOrElse(
       throw new java.io.IOException(
         s"Scd2: no committed version under $srcDir"))
-    val cursor = SnapshotTable.latestVersion(spark, dimDir)
-      .map(SnapshotTable.manifestTxns(spark, dimDir, _))
-      .getOrElse(Map.empty).get(appId)
+    val cursor = SnapshotTable.headSnapshot(spark, dimDir)
+      .flatMap(_.state.txns.get(appId))
     if (cursor.exists(_ >= srcV)) return None
     cursor match {
       case None =>

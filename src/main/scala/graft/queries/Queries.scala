@@ -12630,16 +12630,15 @@ object Queries {
       val before = graft.sources.SnapshotTable.manifestFiles(s, dir,
         graft.sources.SnapshotTable.latestVersion(s, dir).get).toSet
       s.sql(s"DELETE FROM graft.`$dir` WHERE o_orderkey % 10 = 0")
-      val v = graft.sources.SnapshotTable.latestVersion(s, dir).get
-      require(graft.sources.SnapshotTable.manifestFiles(s, dir, v).toSet ==
-        before, "MoR DELETE must not rewrite any file")
-      require(graft.sources.SnapshotTable.manifestDvRefs(s, dir, v).nonEmpty,
-        "MoR DELETE must land a deletion vector")
+      val st = graft.sources.SnapshotTable
+        .snapshot(s, dir, None, "q_snapshot_tblprops").state
+      require(st.files.toSet == before, "MoR DELETE must not rewrite any file")
+      require(st.dvRefs.nonEmpty, "MoR DELETE must land a deletion vector")
       s.sql(s"UPDATE graft.`$dir` SET o_totalprice = o_totalprice * 2 " +
         "WHERE o_orderpriority = '1-URGENT'")
       s.sql(s"OPTIMIZE graft.`$dir`")
-      val v3 = graft.sources.SnapshotTable.latestVersion(s, dir).get
-      require(graft.sources.SnapshotTable.manifestDvRefs(s, dir, v3).isEmpty,
+      require(graft.sources.SnapshotTable
+        .snapshot(s, dir, None, "q_snapshot_tblprops").state.dvRefs.isEmpty,
         "OPTIMIZE must materialize the vectors")
       s.sql(s"""SELECT o_orderpriority AS priority, count(*) AS n,
         CAST(sum(CAST(o_totalprice AS DECIMAL(18,6)) * 100) AS BIGINT)

@@ -83,17 +83,17 @@ final class GraftDataSource extends RelationProvider
           java.sql.Timestamp.valueOf(t).getTime)
         SnapshotTable.versionAtTimestamp(spark, dir, millis)
       })
-    val (rel, schema, v) = SnapshotSql.relation(spark, dir, version)
+    val snap = SnapshotTable.snapshot(spark, dir, version, "SnapshotSql")
+    val (rel, schema) = SnapshotSql.relation(spark, dir, snap)
     // A DV'd snapshot cannot be served as a bare file relation (the
     // scan would resurrect masked rows), and neither can a
     // column-mapped one (the bare relation's schema is the PHYSICAL
     // scan schema); both route through a scan relation that runs the
     // fully-resolved frame — same manifest-pruned parquet scan
     // underneath, plus the anti-join / logical rename.
-    if (SnapshotTable.manifestDvRefs(spark, dir, v).isEmpty &&
-        SnapshotTable.manifestColMap(spark, dir, v).isEmpty &&
-        SnapshotTable.manifestDefaults(spark, dir, v).isEmpty) rel
-    else new DvMaskedRelation(spark, dir, v, schema)
+    if (snap.state.dvRefs.isEmpty && snap.state.colMap.isEmpty &&
+        snap.state.defaults.isEmpty) rel
+    else new DvMaskedRelation(spark, dir, snap, schema)
   }
 
   // ---- batch write --------------------------------------------------
@@ -226,12 +226,12 @@ object GraftDataSource {
       .filter(_.nonEmpty)
 
   private def tableSchema(spark: SparkSession, dir: String): StructType = {
-    val v = SnapshotTable.latestVersion(spark, dir).getOrElse(
+    val snap = SnapshotTable.headSnapshot(spark, dir).getOrElse(
       throw new java.io.IOException(
         s"graft: no committed version under $dir — streaming reads need " +
           "an initialized table (commit an empty append to start one)"))
-    SnapshotTable.manifestSchema(spark, dir, v)
-      .getOrElse(SnapshotTable.read(spark, dir, Some(v)).schema)
+    snap.state.schema
+      .getOrElse(SnapshotTable.read(spark, dir, Some(snap.version)).schema)
   }
 }
 
@@ -264,6 +264,10 @@ private[sources] trait GraftRateLimited
 
   require(maxFiles.forall(_ > 0), "maxFilesPerTrigger must be positive")
   require(maxBytes.forall(_ > 0), "maxBytesPerTrigger must be positive")
+
+  /** The table state at committed version `v`. */
+  protected final def stateAt(v: Long): SnapshotTable.TableState =
+    SnapshotTable.snapshot(rlSpark, rlDir, Some(v), "graft stream").state
 
   protected final def limited: Boolean =
     maxFiles.nonEmpty || maxBytes.nonEmpty
@@ -357,7 +361,7 @@ private[sources] trait GraftRateLimited
           // the stream), defer otherwise
           if (files > 0) done = true
           else {
-            val sizes = SnapshotTable.manifestSizes(rlSpark, rlDir, pos.v)
+            val sizes = stateAt(pos.v).sizes
             files += list.size
             bytes += list.map(sizes.getOrElse(_, 0L)).sum
             progressed = true
@@ -366,7 +370,7 @@ private[sources] trait GraftRateLimited
         } else {
           val consumed = math.min(pos.iNorm(list.size), list.size)
           if (consumed < list.size) {
-            val sizes = SnapshotTable.manifestSizes(rlSpark, rlDir, pos.v)
+            val sizes = stateAt(pos.v).sizes
             var i = consumed
             var stop = false
             while (i < list.size && !stop) {
@@ -572,7 +576,7 @@ final class GraftStreamSource(spark: SparkSession, dir: String,
         val fullSpan = lo == 0 && hi == list.size
         out ++= (if (fullSpan && ignoreChanges)
           slice.filterNot(removedLater) else slice)
-        sizes ++= SnapshotTable.manifestSizes(spark, dir, v)
+        sizes ++= stateAt(v).sizes
       }
     }
     // begin version's tail (empty when begin.i is Complete)
@@ -613,13 +617,12 @@ final class GraftStreamSource(spark: SparkSession, dir: String,
     // WIDENED mid-stream (new files carry the wider pages; scanning
     // them with the captured narrow schema would throw a raw parquet
     // conversion error with no hint). Restarting re-captures.
-    val colMap = SnapshotTable.manifestColMap(spark, dir, atVersion)
-    val retired = SnapshotTable.manifestRetired(spark, dir, atVersion)
-    val liveSchema = SnapshotTable.manifestSchema(spark, dir, atVersion)
-    liveSchema.foreach { ls =>
+    val st = stateAt(atVersion)
+    val colMap = st.colMap
+    st.schema.foreach { ls =>
       val liveTypes = ls.fields.map(f => f.name -> f.dataType).toMap
       val gone = schema.fieldNames.filterNot(liveTypes.contains)
-      if (gone.nonEmpty && (colMap.nonEmpty || retired.nonEmpty))
+      if (gone.nonEmpty && (colMap.nonEmpty || st.retired.nonEmpty))
         throw new IllegalStateException(
           s"graft streaming source: column(s) ${gone.mkString(", ")} were " +
             "renamed or dropped mid-stream — restart the stream to " +
@@ -652,8 +655,7 @@ final class GraftStreamSource(spark: SparkSession, dir: String,
       // stream-static left-anti join, a supported incremental shape);
       // the logical rename projects on top and keeps the plan
       // streaming.
-      val masked = SnapshotTable.dvMaskOver(spark, dir,
-        SnapshotTable.manifestDvRefs(spark, dir, atVersion), fs, base)
+      val masked = SnapshotTable.dvMaskOver(spark, dir, st.dvRefs, fs, base)
       if (colMap.isEmpty) masked
       else masked.select(schema.fields.map(f =>
         col(SnapshotTable.physName(colMap, f.name)).as(f.name)).toSeq: _*)
@@ -667,7 +669,7 @@ final class GraftStreamSource(spark: SparkSession, dir: String,
     val defaults =
       (if (files.isEmpty || atVersion < 0)
          Map.empty[String, (String, Set[String])]
-       else SnapshotTable.manifestDefaults(spark, dir, atVersion))
+       else st.defaults)
         .filter { case (c, (_, pre)) =>
           schema.fieldNames.contains(c) && files.exists(pre) }
     if (defaults.isEmpty) buildSlice(files)
@@ -804,7 +806,7 @@ final class GraftCdfStreamSource(spark: SparkSession, dir: String,
     // fail LOUDLY with a restart hint (same contract as the plain
     // source — without this a rename/drop/widen surfaces as a raw
     // unresolved-column or parquet-conversion error deep in a step).
-    SnapshotTable.manifestSchema(spark, dir, to).foreach { live =>
+    stateAt(to).schema.foreach { live =>
       val liveTypes = live.fields.map(f => f.name -> f.dataType).toMap
       val captured = GraftCdfStreamSource.stripCdfColumns(schema)
       val bad = captured.fields.filter(f =>
@@ -873,28 +875,27 @@ final class GraftCdfStreamSource(spark: SparkSession, dir: String,
     * would have emitted for those files. */
   private def sliceInserts(files: Seq[String], v: Long): DataFrame = {
     val dataSchema = stripCdfColumns(schema)
-    val colMap = SnapshotTable.manifestColMap(spark, dir, v)
+    val st = stateAt(v)
+    val colMap = st.colMap
     val scanSchema =
       if (colMap.isEmpty) dataSchema
       else SnapshotTable.physSchemaOf(colMap, dataSchema)
-    val sizes = SnapshotTable.manifestSizes(spark, dir, v)
     def buildSlice(fs: Seq[String]): DataFrame = {
-      val index = new ExactFilesIndex(spark, dir, fs, sizes)
+      val index = new ExactFilesIndex(spark, dir, fs, st.sizes)
       val rel = HadoopFsRelation(index, new StructType(), scanSchema, None,
         new ParquetFileFormat(), Map.empty)(spark)
       val plan = LogicalRelation(rel,
         DataTypeUtils.toAttributes(scanSchema), None,
         isStreaming = false, None)
       val base = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
-      val masked = SnapshotTable.dvMaskOver(spark, dir,
-        SnapshotTable.manifestDvRefs(spark, dir, v), fs, base)
+      val masked = SnapshotTable.dvMaskOver(spark, dir, st.dvRefs, fs, base)
       if (colMap.isEmpty) masked
       else masked.select(dataSchema.fields.map(f =>
         col(SnapshotTable.physName(colMap, f.name)).as(f.name)).toSeq: _*)
     }
     // initial DEFAULTS — same group-split as every other read surface,
     // so a CDF consumer sees the served values, not scan NULLs
-    val defaults = SnapshotTable.manifestDefaults(spark, dir, v)
+    val defaults = st.defaults
       .filter { case (c, (_, pre)) =>
         dataSchema.fieldNames.contains(c) && files.exists(pre) }
     val logical =
@@ -949,7 +950,8 @@ object GraftCdfStreamSource {
   * residual — pushing here is pruning-only, never a correctness
   * dependency), and rows hand over as InternalRows
   * (`needConversion = false`) to skip a per-row conversion. */
-final class DvMaskedRelation(spark: SparkSession, dir: String, v: Long,
+final class DvMaskedRelation(spark: SparkSession, dir: String,
+                             snap: SnapshotTable.Snapshot,
                              override val schema: StructType
                             ) extends BaseRelation with PrunedFilteredScan {
 
@@ -958,11 +960,10 @@ final class DvMaskedRelation(spark: SparkSession, dir: String, v: Long,
   override def unhandledFilters(filters: Array[sf.Filter]): Array[sf.Filter] =
     filters
 
-  /** Resolved once per relation — v is pinned, so the DV-masked frame
-    * is stable; repeated buildScan calls (Spark may plan a relation
-    * more than once) reuse it instead of re-resolving manifest
-    * state. */
-  private lazy val baseDf = SnapshotSql.dataFrame(spark, dir, Some(v))
+  /** Built once per relation over the held snapshot — repeated
+    * buildScan calls (Spark may plan a relation more than once) reuse
+    * it. */
+  private lazy val baseDf = SnapshotSql.dataFrame(spark, dir, snap)
 
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[sf.Filter]): RDD[Row] = {
@@ -990,7 +991,7 @@ final class DvMaskedRelation(spark: SparkSession, dir: String, v: Long,
     case _ => None
   }
 
-  override def toString: String = s"DvMaskedRelation[$dir@v$v]"
+  override def toString: String = s"DvMaskedRelation[$dir@v${snap.version}]"
 }
 
 /** [[FileIndex]] over an exact, pre-resolved file list — the
@@ -1002,15 +1003,9 @@ private[sources] final class ExactFilesIndex(spark: SparkSession, dir: String,
                                              files: Seq[String],
                                              sizes: Map[String, Long]
                                             ) extends FileIndex {
-  private val fs = new Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private val statuses: Array[FileStatus] = files.sorted.map { key =>
-    val p = if (key.startsWith("data/")) new Path(dir, key) else new Path(key)
-    sizes.get(key)
-      .map(len => new FileStatus(len, false, 1, len, 0L, p))
-      .getOrElse(fs.getFileStatus(p))
-  }.toArray
+  private val statuses: Array[FileStatus] =
+    SnapshotTable.fileStatuses(spark, dir, files.sorted, sizes)
+      .map(_._2).toArray
 
   override def rootPaths: Seq[Path] = Seq(new Path(dir))
   override def partitionSchema: StructType = new StructType()

@@ -33,18 +33,20 @@ import org.apache.spark.sql.types.{StringType, TimestampType}
 class GraftRelationResolution(spark: SparkSession)
     extends Rule[LogicalPlan] {
 
-  private def dirOf(u: UnresolvedRelation): Option[String] =
+  /** The table `u` names and its head version, when it is a graft
+    * table: detecting it IS resolving its head. */
+  private def headOf(u: UnresolvedRelation): Option[(String, Long)] =
     u.multipartIdentifier match {
-      case Seq(cat, path) if cat.equalsIgnoreCase("graft") &&
-          scala.util.Try(
-            SnapshotTable.latestVersion(spark, path).nonEmpty)
-            .getOrElse(false) =>
-        Some(path)
+      case Seq(cat, path) if cat.equalsIgnoreCase("graft") =>
+        scala.util.Try(SnapshotTable.latestVersion(spark, path)).toOption
+          .flatten.map(path -> _)
       case _ => None
     }
 
-  private def snapshot(dir: String, v: Option[Long]): LogicalPlan =
-    SnapshotSql.dataFrame(spark, dir, v).queryExecution.analyzed
+  private def snapshot(dir: String, v: Long): LogicalPlan =
+    SnapshotSql.dataFrame(spark, dir,
+      SnapshotTable.snapshot(spark, dir, Some(v), "SnapshotSql"))
+      .queryExecution.analyzed
 
   private def tsMillis(e: org.apache.spark.sql.catalyst.expressions
       .Expression): Long = e match {
@@ -65,19 +67,19 @@ class GraftRelationResolution(spark: SparkSession)
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsUp {
       case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, version) =>
-        dirOf(u) match {
+        headOf(u) match {
           case None => tt
-          case Some(dir) => version match {
-            case Some(v) => snapshot(dir, Some(v.toLong))
+          case Some((dir, _)) => version match {
+            case Some(v) => snapshot(dir, v.toLong)
             case None =>
               val millis = tsMillis(ts.getOrElse(
                 throw new IllegalArgumentException(
                   "graft time travel needs VERSION AS OF or TIMESTAMP AS OF")))
-              snapshot(dir, Some(
-                SnapshotTable.versionAtTimestamp(spark, dir, millis)))
+              snapshot(dir,
+                SnapshotTable.versionAtTimestamp(spark, dir, millis))
           }
         }
       case u: UnresolvedRelation =>
-        dirOf(u).map(snapshot(_, None)).getOrElse(u)
+        headOf(u).map { case (dir, head) => snapshot(dir, head) }.getOrElse(u)
     }
 }

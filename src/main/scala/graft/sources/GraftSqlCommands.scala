@@ -898,8 +898,8 @@ object GraftSqlCommands {
       // session's storeAssignmentPolicy (ANSI default: overflow /
       // malformed values fail loudly); source-only columns pass
       // through for add-column evolution.
-      val src = SnapshotTable.latestVersion(spark, dir)
-        .flatMap(v => SnapshotTable.manifestSchema(spark, dir, v)) match {
+      val src = SnapshotTable.headSnapshot(spark, dir)
+        .flatMap(_.state.schema) match {
         case Some(schema) =>
           val types = schema.fields.map(f => f.name -> f.dataType).toMap
           src0.select(src0.columns.map(c =>
@@ -947,8 +947,8 @@ object GraftSqlCommands {
     override val output: Seq[Attribute] = Seq(longAttr("version"))
     override def run(spark: SparkSession): Seq[Row] = {
       val q = spark.sql(query)
-      val aligned = SnapshotTable.latestVersion(spark, dir)
-        .flatMap(v => SnapshotTable.manifestSchema(spark, dir, v)) match {
+      val aligned = SnapshotTable.headSnapshot(spark, dir)
+        .flatMap(_.state.schema) match {
         case Some(schema) =>
           if (q.schema.length != schema.length)
             fail(s"INSERT: query has ${q.schema.length} columns, " +
@@ -1132,9 +1132,9 @@ object GraftSqlCommands {
       AttributeReference("key", StringType, nullable = false)(),
       AttributeReference("value", StringType, nullable = false)())
     override def run(spark: SparkSession): Seq[Row] = {
-      val v = SnapshotTable.latestVersion(spark, dir).getOrElse(
+      val snap = SnapshotTable.headSnapshot(spark, dir).getOrElse(
         fail(s"SHOW TBLPROPERTIES: no committed version under $dir"))
-      SnapshotTable.manifestProps(spark, dir, v)
+      snap.state.props
         .toSeq.sortBy(_._1).map { case (k, value) => Row(k, value) }
     }
   }
@@ -1142,9 +1142,8 @@ object GraftSqlCommands {
   /** True when the table's recorded properties route row-level DML
     * through merge-on-read deletion vectors. */
   private def morEnabled(spark: SparkSession, dir: String): Boolean =
-    SnapshotTable.latestVersion(spark, dir).exists(v =>
-      SnapshotTable.manifestProps(spark, dir, v)
-        .get(SnapshotTable.EnableDeletionVectorsKey).exists(_.toBoolean))
+    SnapshotTable.headSnapshot(spark, dir).exists(_.state.props
+      .get(SnapshotTable.EnableDeletionVectorsKey).exists(_.toBoolean))
 
   /** `DESCRIBE DETAIL` → one metadata-only summary row (`n_rows` is
     * the manifest fold of [[SnapshotTable.countRows]] — no scan). */
@@ -1155,26 +1154,23 @@ object GraftSqlCommands {
       AttributeReference("schema", StringType, nullable = false)(),
       AttributeReference("features", StringType, nullable = false)())
     override def run(spark: SparkSession): Seq[Row] = {
-      val v = SnapshotTable.latestVersion(spark, dir).getOrElse(
+      val snap = SnapshotTable.headSnapshot(spark, dir).getOrElse(
         fail(s"DESCRIBE DETAIL: no committed version under $dir"))
-      val files = SnapshotTable.manifestFiles(spark, dir, v)
-      val bytes = SnapshotTable.manifestSizes(spark, dir, v).values.sum
+      val v = snap.version
+      val st = snap.state
       val rows = SnapshotTable.countRows(spark, dir, Some(v))
-      val schema = SnapshotTable.manifestSchema(spark, dir, v)
+      val schema = st.schema
         .map(_.map(f => s"${f.name} ${f.dataType.simpleString}")
           .mkString(", ")).getOrElse("")
       val feats = Seq(
-        if (SnapshotTable.manifestColMap(spark, dir, v).nonEmpty ||
-            SnapshotTable.manifestRetired(spark, dir, v).nonEmpty)
-          Some("colmap") else None,
-        if (SnapshotTable.manifestDvRefs(spark, dir, v).nonEmpty)
-          Some("dv") else None,
-        if (SnapshotTable.manifestConstraints(spark, dir, v).nonEmpty)
-          Some("constraints") else None,
-        SnapshotTable.manifestBucket(spark, dir, v).map(b =>
-          s"bucket(${b.cols.mkString(",")};${b.numBuckets})")
+        if (st.colMap.nonEmpty || st.retired.nonEmpty) Some("colmap")
+        else None,
+        if (st.dvRefs.nonEmpty) Some("dv") else None,
+        if (st.constraints.nonEmpty) Some("constraints") else None,
+        st.bucket.map(b => s"bucket(${b.cols.mkString(",")};${b.numBuckets})")
       ).flatten.mkString(" ")
-      Seq(Row(v, files.size.toLong, bytes, rows, schema, feats))
+      Seq(Row(v, st.files.size.toLong, st.sizes.values.sum, rows, schema,
+        feats))
     }
   }
 
@@ -1185,9 +1181,9 @@ object GraftSqlCommands {
       AttributeReference("name", StringType, nullable = false)(),
       AttributeReference("expr", StringType, nullable = false)())
     override def run(spark: SparkSession): Seq[Row] = {
-      val v = SnapshotTable.latestVersion(spark, dir).getOrElse(
+      val snap = SnapshotTable.headSnapshot(spark, dir).getOrElse(
         fail(s"SHOW CONSTRAINTS: no committed version under $dir"))
-      SnapshotTable.manifestConstraints(spark, dir, v)
+      snap.state.constraints
         .toSeq.sortBy(_._1).map { case (n, e) => Row(n, e) }
     }
   }

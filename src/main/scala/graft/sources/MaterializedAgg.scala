@@ -128,10 +128,11 @@ object MaterializedAgg {
     * ledger makes replays no-ops. */
   def refresh(spark: SparkSession, dstDir: String): Option[Long] = {
     val meta = readMeta(spark, dstDir)
-    val dstV = SnapshotTable.latestVersion(spark, dstDir).getOrElse(
+    val dst = SnapshotTable.headSnapshot(spark, dstDir).getOrElse(
       throw new java.io.IOException(
         s"MaterializedAgg: view under $dstDir not created"))
-    val cursor = SnapshotTable.manifestTxns(spark, dstDir, dstV)
+    val dstV = dst.version
+    val cursor = dst.state.txns
       .getOrElse(meta.viewId, throw new IllegalStateException(
         s"MaterializedAgg: no ${meta.viewId} cursor in the view ledger " +
           s"under $dstDir — not a MaterializedAgg view?"))

@@ -177,35 +177,37 @@ object SnapshotSql {
     * shared by [[dataFrame]] (temp-view surface) and
     * [[GraftDataSource]] (`spark.read.format("graft")` surface; a
     * HadoopFsRelation IS a V1 BaseRelation, the public
-    * Delta-connector layering). */
+    * Delta-connector layering). Returns the relation and the LOGICAL
+    * schema. */
   private[sources] def relation(spark: SparkSession, dir: String,
-                                version: Option[Long],
+                                snap: SnapshotTable.Snapshot,
                                 only: Option[Seq[String]] = None
-                               ): (HadoopFsRelation, StructType, Long) = {
-    val v = version.orElse(SnapshotTable.latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(s"SnapshotSql: no committed version under $dir"))
-    val schema = SnapshotTable.manifestSchema(spark, dir, v).getOrElse(
-      SnapshotTable.read(spark, dir, Some(v)).schema)
+                               ): (HadoopFsRelation, StructType) = {
+    val st = snap.state
+    val schema = st.schema.getOrElse(
+      SnapshotTable.read(spark, dir, Some(snap.version)).schema)
     // Under an active column mapping the SCAN reads the files'
     // PHYSICAL names; [[dataFrame]] renames to the logical schema on
     // top. The returned StructType stays LOGICAL (what callers serve).
-    val colMap = SnapshotTable.manifestColMap(spark, dir, v)
     val scanSchema =
-      if (colMap.isEmpty) schema
-      else SnapshotTable.physSchemaOf(colMap, schema)
-    val index = new SnapshotFileIndex(spark, dir, v, scanSchema, only)
+      if (st.colMap.isEmpty) schema
+      else SnapshotTable.physSchemaOf(st.colMap, schema)
+    // files in key order: scan partitions (and so unordered row order)
+    // do not depend on commit order
+    val index = new SnapshotFileIndex(spark, dir, st, scanSchema,
+      Some(only.getOrElse(st.files).sorted))
     // A manifest-recorded bucketing claim becomes Spark's BucketSpec:
     // FileSourceScanExec then reports HashPartitioning(cols, n) and a
     // join/agg on the bucket columns plans with ZERO Exchange. The
     // claim is only ever present when every live file was written by
     // appendBucketed under this exact spec (see BucketLayout); its
     // columns are logical — the physical scan needs physical names.
-    val bucketSpec = SnapshotTable.manifestBucket(spark, dir, v).map(b =>
+    val bucketSpec = st.bucket.map(b =>
       org.apache.spark.sql.catalyst.catalog.BucketSpec(
-        b.numBuckets, b.cols.map(SnapshotTable.physName(colMap, _)),
-        b.sortCols.map(SnapshotTable.physName(colMap, _))))
+        b.numBuckets, b.cols.map(SnapshotTable.physName(st.colMap, _)),
+        b.sortCols.map(SnapshotTable.physName(st.colMap, _))))
     (HadoopFsRelation(index, new StructType(), scanSchema, bucketSpec,
-      new ParquetFileFormat(), Map.empty)(spark), schema, v)
+      new ParquetFileFormat(), Map.empty)(spark), schema)
   }
 
   /** Build a DataFrame over a snapshot whose scans prune through the
@@ -217,18 +219,20 @@ object SnapshotSql {
     * [[SnapshotFileIndex.listFiles]] through the anti-join's left
     * side, so manifest pruning and vector masking compose. */
   def dataFrame(spark: SparkSession, dir: String,
-                version: Option[Long] = None): DataFrame = {
-    val v0 = version.orElse(SnapshotTable.latestVersion(spark, dir))
-      .getOrElse(throw new java.io.IOException(
-        s"SnapshotSql: no committed version under $dir"))
+                version: Option[Long] = None): DataFrame =
+    dataFrame(spark, dir,
+      SnapshotTable.snapshot(spark, dir, version, "SnapshotSql"))
+
+  /** [[dataFrame]] over an already-resolved snapshot. */
+  private[sources] def dataFrame(spark: SparkSession, dir: String,
+                                 snap: SnapshotTable.Snapshot): DataFrame = {
     // ADD COLUMN initial DEFAULTS take the same group-split shape as
     // the programmatic readers: one pruned relation per group of
     // files sharing a default signature, the pre-ADD groups replacing
     // those columns with the recorded literal, unioned. Tables
     // without live defaults take the single-relation path below.
-    val defaults = SnapshotTable.manifestDefaults(spark, dir, v0)
-    val allFiles = SnapshotTable.manifestFiles(spark, dir, v0)
-    val relevant = defaults.filter { case (_, (_, pre)) =>
+    val allFiles = snap.state.files
+    val relevant = snap.state.defaults.filter { case (_, (_, pre)) =>
       allFiles.exists(pre) }
     if (relevant.nonEmpty) {
       import org.apache.spark.sql.functions.{col, lit}
@@ -236,7 +240,7 @@ object SnapshotSql {
         .groupBy(f => relevant.keySet.filter(c => relevant(c)._2(f)))
         .toSeq.sortBy(_._2.head)
         .map { case (cols, fs) =>
-          val part = dataFrameOver(spark, dir, v0, Some(fs))
+          val part = dataFrameOver(spark, dir, snap, Some(fs))
           if (cols.isEmpty) part
           else part.select(part.schema.fields.map { f =>
             if (cols.contains(f.name))
@@ -245,21 +249,21 @@ object SnapshotSql {
           }.toIndexedSeq: _*)
         }.reduce(_ unionByName _)
     }
-    dataFrameOver(spark, dir, v0, None)
+    dataFrameOver(spark, dir, snap, None)
   }
 
   /** One manifest-pruned relation over (a subset of) a pinned
     * snapshot — [[dataFrame]]'s single-group body. */
-  private def dataFrameOver(spark: SparkSession, dir: String, v0: Long,
+  private def dataFrameOver(spark: SparkSession, dir: String,
+                            snap: SnapshotTable.Snapshot,
                             only: Option[Seq[String]]): DataFrame = {
-    val (rel, schema, v) = relation(spark, dir, Some(v0), only)
+    val (rel, schema) = relation(spark, dir, snap, only)
     val plan = LogicalRelation(rel,
       DataTypeUtils.toAttributes(rel.dataSchema), None,
       isStreaming = false, None)
     val base = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
-    val files = only.getOrElse(SnapshotTable.manifestFiles(spark, dir, v))
-    val dvRefs = SnapshotTable.manifestDvRefs(spark, dir, v)
-      .view.filterKeys(files.toSet).toMap
+    val files = only.getOrElse(snap.state.files)
+    val dvRefs = snap.state.dvRefs.view.filterKeys(files.toSet).toMap
     val masked =
       if (dvRefs.isEmpty) base
       else SnapshotTable.dvMaskOver(spark, dir, dvRefs, files, base)
@@ -267,7 +271,7 @@ object SnapshotSql {
     // masking, which needs `_metadata`); filters a query pushes
     // against logical names travel through the aliases down to the
     // physical scan and its file pruning.
-    val colMap = SnapshotTable.manifestColMap(spark, dir, v)
+    val colMap = snap.state.colMap
     if (colMap.isEmpty) masked
     else masked.select(schema.fields.map(f =>
       org.apache.spark.sql.functions
@@ -279,16 +283,15 @@ object SnapshotSql {
     * the pinned version. */
   def register(spark: SparkSession, name: String, dir: String,
                version: Option[Long] = None): Long = {
-    val v = version.orElse(SnapshotTable.latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(s"SnapshotSql: no committed version under $dir"))
-    val df = dataFrame(spark, dir, Some(v))
+    val snap = SnapshotTable.snapshot(spark, dir, version, "SnapshotSql")
+    val df = dataFrame(spark, dir, snap)
     df.createOrReplaceTempView(name)
     // no explicit bind: the binding is keyed by THIS view's plan
     // objects, so dropping/replacing the view retires the DML address
     // automatically, and clones (which inherit the view by reference)
     // resolve it too
     recordViewBinding(df, dir)
-    v
+    snap.version
   }
 
   /** A LIVE (auto-advancing) frame over the table: every query
@@ -306,11 +309,9 @@ object SnapshotSql {
     * view keeps serving its registration-time columns — re-register
     * to surface new ones). */
   def dataFrameLive(spark: SparkSession, dir: String): DataFrame = {
-    val v = SnapshotTable.latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"SnapshotSql: no committed version under $dir"))
-    val schema = SnapshotTable.manifestSchema(spark, dir, v).getOrElse(
-      SnapshotTable.read(spark, dir, Some(v)).schema)
+    val snap = SnapshotTable.snapshot(spark, dir, None, "SnapshotSql")
+    val schema = snap.state.schema.getOrElse(
+      SnapshotTable.read(spark, dir, Some(snap.version)).schema)
     val rel = new LiveSnapshotRelation(spark, dir, schema)
     val plan = LogicalRelation(rel,
       DataTypeUtils.toAttributes(schema), None, isStreaming = false, None)
@@ -348,9 +349,8 @@ final class LiveSnapshotRelation(spark: SparkSession, dir: String,
   // Re-resolved per call: planners read this for broadcast decisions,
   // and a live view's size is the head's size.
   override def sizeInBytes: Long =
-    SnapshotTable.latestVersion(spark, dir)
-      .map(v => SnapshotTable.manifestSizes(spark, dir, v).values.sum)
-      .getOrElse(0L)
+    SnapshotTable.headSnapshot(spark, dir)
+      .map(_.state.sizes.values.sum).getOrElse(0L)
 
   private def pinnedVersion(): Long = {
     val latest = SnapshotTable.latestVersion(spark, dir).getOrElse(
@@ -412,34 +412,28 @@ object LiveSnapshotRelation {
     }
 }
 
-/** Manifest-backed [[FileIndex]] over one pinned snapshot version.
-  * Thread-safety: the pruning inputs are immutable snapshot state;
-  * `lastDecision` is advisory observability for specs. */
-final class SnapshotFileIndex(spark: SparkSession, dir: String, version: Long,
+/** Manifest-backed [[FileIndex]] over one resolved snapshot state —
+  * the SQL surfaces' relations and [[SnapshotTable]]'s programmatic
+  * reads plan from it alike. Thread-safety: the pruning inputs are
+  * immutable snapshot state; `lastDecision` is advisory observability
+  * for specs. */
+final class SnapshotFileIndex(spark: SparkSession, dir: String,
+                              state: SnapshotTable.TableState,
                               schema: StructType,
                               only: Option[Seq[String]] = None
                              ) extends FileIndex {
 
-  private val fs = new Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Manifest-relative key → FileStatus, built from the MANIFEST's
-    * recorded per-file sizes — zero filesystem RPCs on the planning
-    * path (the manifest-only-planning property object stores need;
-    * modification time is irrelevant to a pinned-snapshot read and
-    * stamps 0). Files a pre-sizes writer committed fall back to one
-    * getFileStatus each. `only` restricts the index to a subset (the
-    * per-group scans a defaults-split [[SnapshotSql.dataFrame]]
-    * builds); manifest pruning then intersects within it. */
-  private val statuses: Map[String, FileStatus] = {
-    val sizes = SnapshotTable.manifestSizes(spark, dir, version)
-    only.getOrElse(SnapshotTable.manifestFiles(spark, dir, version)).map { key =>
-      val p = if (key.startsWith("data/")) new Path(dir, key) else new Path(key)
-      key -> sizes.get(key)
-        .map(len => new FileStatus(len, false, 1, len, 0L, p))
-        .getOrElse(fs.getFileStatus(p))
-    }.toMap
-  }
+  /** Manifest-relative key → FileStatus, in manifest order, built from
+    * the MANIFEST's recorded per-file sizes — zero filesystem RPCs on
+    * the planning path (the manifest-only-planning property object
+    * stores need; see [[SnapshotTable.fileStatuses]]). `only`
+    * restricts the index to a subset (the per-group scans a
+    * defaults-split [[SnapshotSql.dataFrame]] builds, or the explicit
+    * file list of a programmatic read); manifest pruning then filters
+    * within it. */
+  private val statuses: Seq[(String, FileStatus)] =
+    SnapshotTable.fileStatuses(spark, dir, only.getOrElse(state.files),
+      state.sizes)
 
   /** (selected, total) of the most recent listFiles pruning decision —
     * the observability hook PlanSpec pins file-level skipping on. */
@@ -448,9 +442,9 @@ final class SnapshotFileIndex(spark: SparkSession, dir: String, version: Long,
   override def rootPaths: Seq[Path] = Seq(new Path(dir))
   override def partitionSchema: StructType = new StructType()
   override def inputFiles: Array[String] =
-    statuses.values.map(_.getPath.toString).toArray
+    statuses.map(_._2.getPath.toString).toArray
   override def refresh(): Unit = () // pinned snapshot: nothing to refresh
-  override def sizeInBytes: Long = statuses.values.map(_.getLen).sum
+  override def sizeInBytes: Long = statuses.map(_._2.getLen).sum
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]
@@ -459,24 +453,22 @@ final class SnapshotFileIndex(spark: SparkSession, dir: String, version: Long,
     // simple <attr> <op> <literal> comparison prunes independently and
     // the selections intersect; anything else is ignored (kept files,
     // never dropped — pruning stays conservative, Spark applies the
-    // full residual).
-    val conjuncts = dataFilters.flatMap(splitAnd)
-    var selected: Set[String] = statuses.keySet
+    // full residual). Files the state holds no summary for are kept.
     // Attribute names here come from the SCAN schema — PHYSICAL under
-    // an active column mapping — so the probe must go through the
+    // an active column mapping — so the probe goes through the
     // physical (translation-free) pruning variants.
-    conjuncts.foreach {
-      case Eq(c, v) =>
-        selected = selected.intersect(
-          SnapshotTable.pruneFilesEqPhys(spark, dir, c, v, version)._1.toSet)
-      case Range(c, lo, hi) =>
-        selected = selected.intersect(SnapshotTable.pruneFilesBoundsPhys(
-          spark, dir, c, lo, hi, version)._1.toSet)
-      case _ => () // unrecognized shape: never prunes
-    }
+    val selected = dataFilters.flatMap(splitAnd)
+      .foldLeft(statuses.map(_._1)) {
+        case (fs, Eq(c, v)) =>
+          SnapshotTable.pruneFilesEqPhys(spark, dir, state, fs, c, v)
+        case (fs, Range(c, lo, hi)) =>
+          SnapshotTable.pruneFilesBoundsPhys(state, fs, c, lo, hi)
+        case (fs, _) => fs // unrecognized shape: never prunes
+      }.toSet
     lastDecision = (selected.size, statuses.size)
     Seq(PartitionDirectory(InternalRow.empty,
-      selected.toSeq.sorted.map(statuses).toArray[FileStatus]))
+      statuses.collect { case (k, st) if selected(k) => st }
+        .toArray[FileStatus]))
   }
 
   private def splitAnd(e: Expression): Seq[Expression] = e match {

@@ -30,6 +30,13 @@ import org.apache.spark.sql.types._
   *     next [[TableState]] (`base.copy(...)` — whatever the operation
   *     does not touch is inherited by construction) after its conflict
   *     checks, and publishes that state as v<N+1>.
+  *   - **One snapshot per operation.** A public operation resolves
+  *     its version and state ONCE ([[snapshot]]) and passes that
+  *     [[Snapshot]] to every helper it calls — pruning, deletion-vector
+  *     masking, column mapping, constraint and tracking inheritance,
+  *     and the first commit attempt all see the same version, so a
+  *     read never mixes two versions. Only a commit that loses the
+  *     publish race re-resolves the head.
   *   - **Appends write data files FIRST, then commit.** A crash
   *     between the two leaves orphan files invisible to every reader
   *     (the manifest never references them) — cleaned by [[vacuum]],
@@ -330,11 +337,22 @@ object SnapshotTable {
       bloomRefs: Map[String, String],
       bloomCols: Seq[String],
       legacyBlooms: Map[String, Map[String, Array[Byte]]],
+      // absent on pre-evolution manifests: readers then infer the
+      // schema from the snapshot's parquet files
       schema: Option[StructType],
+      // per-file byte sizes (absent for files committed by pre-r7
+      // writers): what lets planners build their file listing from
+      // the manifest alone, with zero per-file filesystem RPCs
       sizes: Map[String, Long],
+      // file -> deletion-vector sidecar (`_dv/<batch>`, or a clone's
+      // absolute ref); non-empty means the snapshot carries
+      // merge-on-read deletes that every row-level read must apply
       dvRefs: Map[String, String] = Map.empty,
       segments: Seq[(String, Seq[String])] = Nil,
       dvDirty: Set[String] = Set.empty,
+      // the bucketing claim ([[BucketLayout]]): the SQL read surfaces
+      // turn it into Spark's `BucketSpec`, so joins and aggregations
+      // on the bucket columns skip their Exchange
       bucket: Option[BucketLayout] = None,
       constraints: Map[String, String] = Map.empty,
       // COLUMN MAPPING (the public Delta column-mapping idea): the
@@ -698,38 +716,41 @@ object SnapshotTable {
   def manifestFiles(spark: SparkSession, dir: String, v: Long): Seq[String] =
     stateOf(spark, dir, v).files
 
-  /** Highest committed transaction version per writer app id (the
-    * exactly-once ledger [[transactionalAppend]] checks). */
-  def manifestTxns(spark: SparkSession, dir: String, v: Long): Map[String, Long] =
-    stateOf(spark, dir, v).txns
+  /** One resolved snapshot of a table: a committed version and its
+    * complete state. */
+  private[graft] final case class Snapshot(version: Long, state: TableState)
 
-  /** Per-file column stats of a version (file → column → ColStat).
-    * Files or columns without recorded stats are absent — and treated
-    * as un-prunable by [[readWhere]]. */
-  def manifestStats(spark: SparkSession, dir: String,
-                    v: Long): Map[String, Map[String, ColStat]] =
-    stateOf(spark, dir, v).stats
+  /** THE snapshot resolver: `version` (time travel), or the head when
+    * None — for operation `op`, which names the error on a table with
+    * no commit. A public operation resolves exactly one snapshot and
+    * hands it to every helper it calls, so no step of the operation
+    * can see another version than its siblings (a read never pairs
+    * one version's file list with the next one's deletion vectors). */
+  private[graft] def snapshot(spark: SparkSession, dir: String,
+                              version: Option[Long], op: String): Snapshot =
+    version.map(v => Snapshot(v, stateOf(spark, dir, v)))
+      .orElse(headSnapshot(spark, dir))
+      .getOrElse(throw new java.io.IOException(
+        s"$op: no committed version under $dir"))
 
-  /** Per-file Bloom bitsets of a version (file → column → packed
-    * bitset): the point-lookup skipping summary — min/max stats
-    * cannot prune an equality probe on a high-cardinality UNSORTED
-    * key; a per-file Bloom filter can ([[pruneFilesEq]]). Bitsets
-    * live in per-batch SIDECAR files under `_blooms/` (the public
-    * Delta bloom-index layout) with the manifest holding only
-    * path-sized pointers — at 100 TB file counts the bitsets would
-    * otherwise dominate every manifest write. This accessor
-    * materializes the WHOLE map (sidecars included) for
-    * inspection/specs; the probe path ([[pruneFilesEq]]) loads only
-    * the sidecars of files that survive range pruning. */
-  def manifestBlooms(spark: SparkSession, dir: String,
-                     v: Long): Map[String, Map[String, Array[Byte]]] = {
-    val st = stateOf(spark, dir, v)
-    val bySidecar = st.bloomRefs.groupBy(_._2)
-    val fromSidecars = bySidecar.flatMap { case (ref, fileRefs) =>
+  /** The head snapshot, or None for a table with no commit yet — what
+    * a writer that may create the table starts from. */
+  private[graft] def headSnapshot(spark: SparkSession,
+                                  dir: String): Option[Snapshot] =
+    latestVersion(spark, dir).map(v => Snapshot(v, stateOf(spark, dir, v)))
+
+  /** The Bloom bitsets of `files` under `st` (file → column → packed
+    * bitset): legacy inline bitsets plus the SIDECARS those files
+    * reference, each sidecar loaded once — a probe reads O(candidate
+    * files) bloom bytes, never the table's. */
+  private def bloomsOf(spark: SparkSession, dir: String, st: TableState,
+                       files: Seq[String]
+                      ): Map[String, Map[String, Array[Byte]]] = {
+    val needed = st.bloomRefs.view.filterKeys(files.toSet).toMap
+    st.legacyBlooms ++ needed.groupBy(_._2).flatMap { case (ref, fileRefs) =>
       val side = loadBloomSidecar(spark, dir, ref)
       fileRefs.keys.flatMap(f => sidecarLookup(side, f, ref).map(f -> _))
     }
-    st.legacyBlooms ++ fromSidecars
   }
 
   /** Find `file`'s entry in a sidecar. A shallow clone absolutizes
@@ -749,37 +770,6 @@ object SnapshotTable {
         else None
       }
     }
-
-  /** The table schema a version's manifest records (absent on
-    * pre-evolution manifests → readers fall back to parquet
-    * inference over the snapshot's files). */
-  def manifestSchema(spark: SparkSession, dir: String,
-                     v: Long): Option[StructType] =
-    stateOf(spark, dir, v).schema
-
-  /** Per-file byte sizes a version's manifest records (absent for
-    * files committed by pre-r7 writers) — what lets planners build
-    * their file listing from the manifest alone, with zero
-    * per-file filesystem RPCs. */
-  def manifestSizes(spark: SparkSession, dir: String,
-                    v: Long): Map[String, Long] =
-    stateOf(spark, dir, v).sizes
-
-  /** Per-file deletion-vector refs of a version (file → `_dv/<batch>`
-    * sidecar, or a clone's absolute ref) — nonEmpty means the
-    * snapshot carries merge-on-read deletes that every row-level read
-    * must apply. */
-  def manifestDvRefs(spark: SparkSession, dir: String,
-                     v: Long): Map[String, String] =
-    stateOf(spark, dir, v).dvRefs
-
-  /** The version's bucketing claim ([[BucketLayout]]), if every data
-    * file was written by [[appendBucketed]] under one spec. The SQL
-    * read surfaces turn this into Spark's `BucketSpec`, so joins and
-    * aggregations on the bucket columns skip their Exchange. */
-  def manifestBucket(spark: SparkSession, dir: String,
-                     v: Long): Option[BucketLayout] =
-    stateOf(spark, dir, v).bucket
 
   /** Commit AUDIT LOG (the public DESCRIBE HISTORY shape): one row per
     * surviving manifest — (version, op, files added, files removed,
@@ -840,18 +830,14 @@ object SnapshotTable {
     * SnapshotOpsSpec and oracle-checked by q_snapshot_count. */
   def countRows(spark: SparkSession, dir: String,
                 version: Option[Long] = None): Long = {
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(
-        s"countRows: no committed version under $dir"))
-    val st = stateOf(spark, dir, v)
+    val st = snapshot(spark, dir, version, "countRows").state
     if (st.files.isEmpty) return 0L
     val (counted, uncounted) = st.files.partition(f =>
       st.stats.get(f).exists(_.contains(RowsCol)))
     val base = counted.iterator
       .map(f => st.stats(f)(RowsCol).min.toLong).sum +
       (if (uncounted.isEmpty) 0L
-       else readFiles(spark, dir, uncounted,
-         manifestSchema(spark, dir, v)).count())
+       else readFiles(spark, dir, st, uncounted, st.schema).count())
     // distinct() is load-bearing here (COUNT is duplicate-sensitive):
     // dvRows serves raw sidecar rows, unique by writer invariant, but
     // exactness of the subtraction must not rest on that invariant
@@ -992,6 +978,18 @@ object SnapshotTable {
     blooms.keys.map(_ -> rel).toMap
   }
 
+  /** Loaded sidecars by path, bounded like [[segmentCache]]. A sidecar
+    * is immutable once written and named by its batch UUID, so an
+    * entry never goes stale. A point lookup prunes through the
+    * sidecars, then plans its scan from a [[SnapshotFileIndex]] that
+    * prunes the pushed predicate again — between them each sidecar is
+    * read once. */
+  private val sidecarCache = new java.util.LinkedHashMap[String,
+      Map[String, Map[String, Array[Byte]]]](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String,
+        Map[String, Map[String, Array[Byte]]]]): Boolean = size() > 48
+  }
+
   /** Load one sidecar (relative ref under this table, or a shallow
     * clone's absolute ref into its source table). */
   private def loadBloomSidecar(spark: SparkSession, dir: String,
@@ -999,12 +997,19 @@ object SnapshotTable {
                               ): Map[String, Map[String, Array[Byte]]] = {
     val p = if (ref.startsWith("_blooms/")) new Path(dir, ref)
             else new Path(ref)
+    val key = p.toUri.getPath
+    sidecarCache.synchronized {
+      val hit = sidecarCache.get(key)
+      if (hit != null) return hit
+    }
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(p)) return Map.empty // vacuumed sidecar: un-probeable, kept
     val in = f.open(p)
     val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
-    bloomMapOf(mapper.readTree(txt))
+    val side = bloomMapOf(mapper.readTree(txt))
+    sidecarCache.synchronized { sidecarCache.put(key, side); () }
+    side
   }
 
   /** Add-column schema evolution (the [[graft.catalog.Catalog]] /
@@ -1058,86 +1063,58 @@ object SnapshotTable {
   /** Read exactly `files` (relative paths), under the table schema
     * when the manifest records one — an explicit schema makes parquet
     * surface NULL for columns a file predates, which is what lets one
-    * scan span an evolving file population. */
-  /** Above this many explicit files, [[readFiles]] hands path
-    * resolution back to Spark's (distributed) listing machinery; at
-    * or below it, the scan plans from driver-side statuses with zero
-    * listing jobs. Manifest-driven reads pass bounded file subsets
-    * (touched files, pruned candidates), so the fast path is the
-    * norm; a full-table read of a million-file table still gets the
-    * parallel listing it needs. */
-  private val ExplicitIndexMaxFiles = 4096
-
-  private def readFiles(spark: SparkSession, dir: String,
+    * scan span an evolving file population. The scan plans from a
+    * [[SnapshotFileIndex]] over `st`: file statuses come from the
+    * manifest's recorded sizes (one getFileStatus only per file with
+    * no recorded size), so there is no listing job and no per-file
+    * RPC — where `spark.read.parquet(paths)` would re-stat every path
+    * and, above `parallelPartitionDiscovery.threshold`, launch a
+    * listing job per read. Pushed filters prune through `st`'s
+    * stats/Bloom summaries; files `st` has no summary for (a batch not
+    * yet committed) are always kept. */
+  private def readFiles(spark: SparkSession, dir: String, st: TableState,
                         files: Seq[String],
-                        schema: Option[StructType]): DataFrame = {
-    // Relative entries live under THIS table; absolute entries are a
-    // shallow clone's references into its source table.
-    val paths = files.map(p => if (p.startsWith("data/")) s"$dir/$p" else p)
+                        schema: Option[StructType]): DataFrame =
     schema match {
-      case Some(st) if files.nonEmpty &&
-          files.length <= ExplicitIndexMaxFiles =>
-        // EXPLICIT-FILE relation: the caller already knows the exact
-        // file set from the manifest, so handing the paths to
-        // spark.read.parquet — which re-stats every one and, above
-        // spark.sql.sources.parallelPartitionDiscovery.threshold
-        // (32), launches a whole LISTING JOB per read — is pure
-        // overhead on every probe, rewrite and feed read. One
-        // driver-side getFileStatus per file feeds a fixed FileIndex
-        // instead (the SnapshotFileIndex manifest-only-planning idea,
-        // applied to the programmatic read path).
-        val f = fs(spark, dir)
-        // Independent metadata RPCs — overlap on a bounded pool (the
-        // footerSummaries pattern): serial per-file stats on an
-        // object store would cost more than the listing job this
-        // path removes.
-        val statuses =
-          if (paths.lengthCompare(4) <= 0)
-            paths.map(p => f.getFileStatus(new Path(p)))
-          else {
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(8, paths.length))
-            implicit val ec: scala.concurrent.ExecutionContext =
-              scala.concurrent.ExecutionContext.fromExecutor(pool)
-            try scala.concurrent.Await.result(
-              scala.concurrent.Future.sequence(paths.map(p =>
-                scala.concurrent.Future(f.getFileStatus(new Path(p))))),
-              scala.concurrent.duration.Duration.Inf)
-            finally pool.shutdown()
-          }
-        val index = new ExplicitFileIndex(new Path(dir), statuses)
+      case Some(sch) if files.nonEmpty =>
         val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-          index, new StructType(), st, None,
+          new SnapshotFileIndex(spark, dir, st, sch, Some(files)),
+          new StructType(), sch, None,
           new org.apache.spark.sql.execution.datasources.parquet
             .ParquetFileFormat(), Map.empty)(spark)
         org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
           org.apache.spark.sql.execution.datasources.LogicalRelation(
             rel, org.apache.spark.sql.catalyst.types.DataTypeUtils
               .toAttributes(rel.dataSchema), None, isStreaming = false, None))
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
+      case _ =>
+        // Relative entries live under THIS table; absolute entries are
+        // a shallow clone's references into its source table.
+        val paths = files.map(p => filePath(dir, p).toString)
+        schema.fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
     }
-  }
 
-  /** Fixed file set as a [[org.apache.spark.sql.execution.datasources
-    * .FileIndex]]: no directory listing, no refresh — the statuses
-    * ARE the table subset being read (see [[readFiles]]). */
-  private final class ExplicitFileIndex(
-      root: Path, statuses: Seq[FileStatus])
-    extends org.apache.spark.sql.execution.datasources.FileIndex {
-    override def rootPaths: Seq[Path] = Seq(root)
-    override def partitionSchema: StructType = new StructType()
-    override def inputFiles: Array[String] =
-      statuses.map(_.getPath.toString).toArray
-    override def refresh(): Unit = ()
-    override def sizeInBytes: Long = statuses.map(_.getLen).sum
-    override def listFiles(
-        partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-        dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory] =
-      Seq(org.apache.spark.sql.execution.datasources.PartitionDirectory(
-        org.apache.spark.sql.catalyst.InternalRow.empty,
-        statuses.toArray[FileStatus]))
+  /** The path of manifest entry `key`: relative entries live under the
+    * table's `data/`, absolute ones are a shallow clone's references
+    * into its source table. */
+  private[sources] def filePath(dir: String, key: String): Path =
+    if (key.startsWith("data/")) new Path(dir, key) else new Path(key)
+
+  /** `files`' statuses from the manifest-recorded `sizes` — zero
+    * filesystem RPCs on the planning path (modification time is
+    * irrelevant to a pinned-snapshot read and stamps 0); a file with
+    * no recorded size (a pre-sizes writer, or a batch not yet
+    * committed) falls back to one getFileStatus. */
+  private[sources] def fileStatuses(spark: SparkSession, dir: String,
+                                    files: Seq[String],
+                                    sizes: Map[String, Long]
+                                   ): Seq[(String, FileStatus)] = {
+    lazy val f = fs(spark, dir)
+    files.map { key =>
+      val p = filePath(dir, key)
+      key -> sizes.get(key)
+        .map(len => new FileStatus(len, false, 1, len, 0L, p))
+        .getOrElse(f.getFileStatus(p))
+    }
   }
 
   // ------------------------------------------------------------------
@@ -1287,13 +1264,9 @@ object SnapshotTable {
     * the frame then renamed to the LOGICAL schema — callers only ever
     * see logical names. */
   private def readFilesWithDv(spark: SparkSession, dir: String,
-                              files: Seq[String],
-                              schema: Option[StructType],
-                              dvRefs: Map[String, String],
-                              colMap: Map[String, String] = Map.empty,
-                              defaults: Map[String, (String, Set[String])] =
-                                Map.empty
-                             ): DataFrame = {
+                              snap: Snapshot,
+                              files: Seq[String]): DataFrame = {
+    val st = snap.state
     // ADD COLUMN initial DEFAULTS — group-split read: files are
     // grouped by WHICH default columns consider them pre-ADD, each
     // group scans once, and the pre-ADD groups replace those columns
@@ -1303,17 +1276,18 @@ object SnapshotTable {
     // comparisons, pushed filters prune each branch independently,
     // and a table without live defaults takes the single-scan path
     // untouched.
-    val relevant = defaults.filter { case (_, (_, pre)) =>
+    val relevant = st.defaults.filter { case (_, (_, pre)) =>
       files.exists(pre) }
-    if (relevant.nonEmpty) {
-      val logical = schema.getOrElse(throw new IllegalStateException(
+    if (relevant.isEmpty) readMasked(spark, dir, st, files)
+    else {
+      val logical = st.schema.getOrElse(throw new IllegalStateException(
         s"column defaults active under $dir but the manifest records " +
           "no schema — corrupt metadata"))
-      return files
+      files
         .groupBy(f => relevant.keySet.filter(c => relevant(c)._2(f)))
         .toSeq.sortBy(_._2.head)
         .map { case (cols, fs) =>
-          val base = readFilesWithDv(spark, dir, fs, schema, dvRefs, colMap)
+          val base = readMasked(spark, dir, st, fs)
           if (cols.isEmpty) base
           else base.select(logical.fields.map { f =>
             if (cols.contains(f.name))
@@ -1322,18 +1296,40 @@ object SnapshotTable {
           }.toIndexedSeq: _*)
         }.reduce(_ unionByName _)
     }
-    if (colMap.isEmpty)
-      dvMaskOver(spark, dir, dvRefs, files,
-        readFiles(spark, dir, files, schema))
+  }
+
+  /** [[readFilesWithDv]] without the defaults split: `files` under
+    * `st`'s schema and column mapping, its deletion vectors applied. */
+  private def readMasked(spark: SparkSession, dir: String, st: TableState,
+                         files: Seq[String]): DataFrame =
+    if (st.colMap.isEmpty)
+      dvMaskOver(spark, dir, st.dvRefs, files,
+        readFiles(spark, dir, st, files, st.schema))
     else {
-      val logical = schema.getOrElse(throw new IllegalStateException(
+      val logical = st.schema.getOrElse(throw new IllegalStateException(
         s"column mapping active under $dir but the manifest records no " +
           "schema — corrupt metadata"))
-      val masked = dvMaskOver(spark, dir, dvRefs, files,
-        readFiles(spark, dir, files, Some(physSchemaOf(colMap, logical))))
-      toLogicalFrame(masked, colMap, logical)
+      val masked = dvMaskOver(spark, dir, st.dvRefs, files, readFiles(spark,
+        dir, st, files, Some(physSchemaOf(st.colMap, logical))))
+      toLogicalFrame(masked, st.colMap, logical)
     }
-  }
+
+  /** The whole snapshot ([[read]]'s body): every file, vectors
+    * applied; a file-less snapshot is an empty frame under its
+    * schema. */
+  private def readSnapshot(spark: SparkSession, dir: String,
+                           snap: Snapshot): DataFrame =
+    if (snap.state.files.nonEmpty)
+      readFilesWithDv(spark, dir, snap, snap.state.files)
+    else snap.state.schema.map(sch => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch))
+      .getOrElse(spark.emptyDataFrame)
+
+  /** No rows, under the snapshot's read schema — what a read whose
+    * pruning kept no file returns. */
+  private def noRows(spark: SparkSession, dir: String,
+                     snap: Snapshot): DataFrame =
+    readSnapshot(spark, dir, snap).filter(lit(false))
 
   /** Serializes same-JVM committers. Commit atomicity rests on a
     * rename-that-fails-if-destination-exists — which HDFS-class
@@ -1410,30 +1406,33 @@ object SnapshotTable {
   }
 
   /** THE commit loop — every committing operation runs through it.
-    * Each attempt resolves the head once (`latestVersion`, then its
-    * state — None for a table with no commits) and hands it to
-    * `next`, which runs the operation's conflict checks and returns
-    * the complete state to publish as the next version, or None for a
-    * no-op (a replayed transaction, nothing left to change) — returned
-    * as-is. A lost publish race re-resolves the new head and retries.
-    * `op` names the operation in errors; `recordAs` overrides the op
-    * recorded in the manifest. */
-  private def commitLoop(spark: SparkSession, dir: String, op: String,
+    * Each attempt hands its base state (None for a table with no
+    * commits) to `next`, which runs the operation's conflict checks
+    * and returns the complete state to publish as the next version, or
+    * None for a no-op (a replayed transaction, nothing left to change)
+    * — returned as-is. The first attempt's base is `head`, the
+    * snapshot the operation already resolved; only a lost publish race
+    * re-resolves the (new) head and retries. `op` names the operation
+    * in errors; `recordAs` overrides the op recorded in the
+    * manifest. */
+  private def commitLoop(spark: SparkSession, dir: String,
+                         head: Option[Snapshot], op: String,
                          maxRetries: Int, recordAs: Option[String] = None)
                         (next: Option[TableState] => Option[TableState]
                         ): Option[Long] = {
+    var base = head
     var attempt = 0
     while (attempt < maxRetries) {
-      val base = latestVersion(spark, dir)
-      val parent = base.map(stateOf(spark, dir, _))
-      val v = base.fold(0L)(_ + 1)
+      val parent = base.map(_.state)
+      val v = base.fold(0L)(_.version + 1)
       next(parent) match {
         case None => return None
         case Some(target) =>
           if (tryCommit(spark, dir, v, parent, target, recordAs.getOrElse(op)))
             return Some(v)
       }
-      attempt += 1 // lost the race: re-read the new head and retry
+      attempt += 1
+      base = headSnapshot(spark, dir) // lost the race: take the new head
     }
     throw new java.io.IOException(
       s"$op: lost the commit race $maxRetries times under $dir")
@@ -2222,7 +2221,7 @@ object SnapshotTable {
     * keep the strict eligibility check here (a typo fails loudly);
     * the downstream compute runs non-strict so INHERITED legacy
     * columns degrade instead of wedging the append. */
-  private def inheritTracking(spark: SparkSession, dir: String,
+  private def inheritTracking(head: Option[Snapshot],
                               df: DataFrame, statsCols: Seq[String],
                               bloomCols: Seq[String])
       : (Seq[String], Seq[String]) = {
@@ -2232,14 +2231,13 @@ object SnapshotTable {
           "not bloom-eligible; only string and integral key columns probe " +
           "consistently (build casts to string, probe renders via toString)")
     }
-    val base = latestVersion(spark, dir)
     // Tracked lists are recorded in PHYSICAL names; caller-supplied
     // columns arrive LOGICAL — translate before merging, and filter
     // inherited columns by the batch's PHYSICAL field set.
-    val cm = base.map(stateOf(spark, dir, _).colMap).getOrElse(Map.empty)
+    val cm = head.map(_.state.colMap).getOrElse(Map.empty)
     val fields = df.schema.fieldNames.map(physName(cm, _)).toSet
-    val ts = base.map(trackedStatsCols(spark, dir, _)).getOrElse(Nil)
-    val tb = base.map(trackedBloomCols(spark, dir, _)).getOrElse(Nil)
+    val ts = head.map(trackedStatsCols).getOrElse(Nil)
+    val tb = head.map(_.state.bloomCols).getOrElse(Nil)
     ((statsCols.map(physName(cm, _)) ++ ts.filter(fields)).distinct,
       (bloomCols.map(physName(cm, _)) ++ tb.filter(fields)).distinct)
   }
@@ -2254,17 +2252,17 @@ object SnapshotTable {
   def append(df: DataFrame, dir: String, statsCols: Seq[String] = Nil,
              bloomCols: Seq[String] = Nil, maxRetries: Int = 20): Long = {
     val spark = df.sparkSession
+    val head = headSnapshot(spark, dir)
     // Pre-flight evolution check BEFORE the data write: a type
     // conflict must not cost a doomed batch (the authoritative check
     // re-runs against whatever manifest the commit loop lands on).
-    latestVersion(spark, dir).flatMap(manifestSchema(spark, dir, _))
-      .foreach(evolveSchema(_, df.schema))
-    val vcs = enforceConstraints(spark, dir, df, "append")
-    val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
+    head.flatMap(_.state.schema).foreach(evolveSchema(_, df.schema))
+    val vcs = enforceConstraints(head, df, "append")
+    val (sCols, bCols) = inheritTracking(head, df, statsCols, bloomCols)
     val wb = labeled(spark, "append") {
-      writeBatch(df, dir, sCols, bCols, strictBlooms = false)
+      writeBatch(df, dir, head, sCols, bCols, strictBlooms = false)
     }
-    commitAppend(spark, dir, df.schema, wb.added, wb.stats, wb.refs,
+    commitAppend(spark, dir, head, df.schema, wb.added, wb.stats, wb.refs,
       wb.bloomCols, maxRetries, "append",
       addedSizes = wb.sizes,
       validatedConstraints = vcs,
@@ -2283,12 +2281,13 @@ object SnapshotTable {
   def overwrite(df: DataFrame, dir: String, statsCols: Seq[String] = Nil,
                 bloomCols: Seq[String] = Nil, maxRetries: Int = 20): Long = {
     val spark = df.sparkSession
-    var validated = enforceConstraints(spark, dir, df, "overwrite")
+    val head = headSnapshot(spark, dir)
+    var validated = enforceConstraints(head, df, "overwrite")
     // table POLICY (tracked stats/bloom columns) survives a replace,
     // same as constraints do — one overwrite must not strip pruning
-    val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val wb = writeBatch(df, dir, sCols, bCols, strictBlooms = false)
-    commitLoop(spark, dir, "overwrite", maxRetries) { st =>
+    val (sCols, bCols) = inheritTracking(head, df, statsCols, bloomCols)
+    val wb = writeBatch(df, dir, head, sCols, bCols, strictBlooms = false)
+    commitLoop(spark, dir, head, "overwrite", maxRetries) { st =>
       checkMapClaim(st, wb.claim, "overwrite")
       val base = st.getOrElse(EmptyState)
       validated = recheckConstraints(spark, dir, base.constraints, validated,
@@ -2308,6 +2307,7 @@ object SnapshotTable {
     * with `added`, carry txns/stats/bloom refs forward and evolve the
     * schema. None = a replayed `txn`. */
   private def commitAppend(spark: SparkSession, dir: String,
+                           head: Option[Snapshot],
                            dfSchema: StructType, added: Seq[String],
                            addedStats: Map[String, Map[String, ColStat]],
                            addedRefs: Map[String, String],
@@ -2321,7 +2321,7 @@ object SnapshotTable {
                            claim: Option[MapClaim] = None
                           ): Option[Long] = {
     var validated = validatedConstraints
-    commitLoop(spark, dir, op, maxRetries) { st =>
+    commitLoop(spark, dir, head, op, maxRetries) { st =>
       checkMapClaim(st, claim, op)
       // A bucketing claim only survives the commit if whatever table
       // state this attempt lands on still supports it (empty, or
@@ -2378,17 +2378,17 @@ object SnapshotTable {
           " cannot carry pruning stats")
     }
     val spark = df.sparkSession
-    latestVersion(spark, dir).foreach { v =>
-      manifestSchema(spark, dir, v).foreach(evolveSchema(_, df.schema))
-      val cur = stateOf(spark, dir, v)
+    val head = headSnapshot(spark, dir)
+    head.map(_.state).foreach { cur =>
+      cur.schema.foreach(evolveSchema(_, df.schema))
       require(cur.colMap.isEmpty && cur.retired.isEmpty,
         "appendPartitioned: not supported on a column-mapped table — " +
           "the hive-routed writer derives its layout from column names; " +
           "use append (pruning stats still inherit), or recreate the " +
           "table without a mapping")
     }
-    val vcs = enforceConstraints(spark, dir, df, "appendPartitioned")
-    val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
+    val vcs = enforceConstraints(head, df, "appendPartitioned")
+    val (sCols, bCols) = inheritTracking(head, df, statsCols, bloomCols)
     val f = fs(spark, dir)
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
@@ -2403,7 +2403,7 @@ object SnapshotTable {
     val (stats, blooms) = summarizeBatch(spark, dir, batchDir, listed,
       (partitionBy ++ sCols).distinct, bCols, strictBlooms = false)
     val refs = writeBloomSidecar(spark, dir, batch, blooms)
-    commitAppend(spark, dir, df.schema, added, stats, refs, bCols,
+    commitAppend(spark, dir, head, df.schema, added, stats, refs, bCols,
       maxRetries, "appendPartitioned", addedSizes = sizes,
       validatedConstraints = vcs).get // non-txn append never no-ops
   }
@@ -2442,9 +2442,9 @@ object SnapshotTable {
       require(df.columns.contains(c), s"appendBucketed: no such column $c") }
     val spark = df.sparkSession
     val layout = BucketLayout(numBuckets, bucketBy, sortBy)
-    latestVersion(spark, dir).foreach { v =>
-      manifestSchema(spark, dir, v).foreach(evolveSchema(_, df.schema))
-      val cur = stateOf(spark, dir, v)
+    val head = headSnapshot(spark, dir)
+    head.map(_.state).foreach { cur =>
+      cur.schema.foreach(evolveSchema(_, df.schema))
       require(cur.colMap.isEmpty && cur.retired.isEmpty,
         "appendBucketed: not supported on a column-mapped table — the " +
           "bucketed writer derives its layout from column names; use " +
@@ -2453,8 +2453,8 @@ object SnapshotTable {
         s"appendBucketed: table under $dir is not bucketed as $layout " +
           s"(found ${cur.bucket.orNull}) — overwrite or compact first")
     }
-    val vcs = enforceConstraints(spark, dir, df, "appendBucketed")
-    val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
+    val vcs = enforceConstraints(head, df, "appendBucketed")
+    val (sCols, bCols) = inheritTracking(head, df, statsCols, bloomCols)
     val f = fs(spark, dir)
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
@@ -2466,7 +2466,7 @@ object SnapshotTable {
     val (stats, blooms) = summarizeBatch(spark, dir, batchDir, listed,
       sCols, bCols, strictBlooms = false)
     val refs = writeBloomSidecar(spark, dir, batch, blooms)
-    commitAppend(spark, dir, df.schema, added, stats, refs, bCols,
+    commitAppend(spark, dir, head, df.schema, added, stats, refs, bCols,
       maxRetries, "appendBucketed", addedSizes = sizes,
       bucket = Some(layout),
       validatedConstraints = vcs).get // non-txn append never no-ops
@@ -2524,11 +2524,11 @@ object SnapshotTable {
     require(partitionBy.nonEmpty,
       "transactionalAppendPartitioned: at least one partition column required")
     val spark = df.sparkSession
+    val head = headSnapshot(spark, dir)
     // Cheap pre-check saves the data write on the common replay path;
     // the authoritative check re-runs inside the commit loop.
-    val pre = latestVersion(spark, dir)
-      .map(manifestTxns(spark, dir, _)).getOrElse(Map.empty)
-    if (pre.getOrElse(appId, Long.MinValue) >= txnVersion) return None
+    if (head.exists(h => replayed(h.state, Some(appId -> txnVersion))))
+      return None
     partitionBy.foreach { c =>
       require(df.columns.contains(c),
         s"transactionalAppendPartitioned: no such column $c")
@@ -2536,11 +2536,9 @@ object SnapshotTable {
         s"transactionalAppendPartitioned: column $c " +
           s"(${df.schema(c).dataType.simpleString}) cannot carry pruning stats")
     }
-    latestVersion(spark, dir).flatMap(manifestSchema(spark, dir, _))
-      .foreach(evolveSchema(_, df.schema))
-    val vcs =
-      enforceConstraints(spark, dir, df, "transactionalAppendPartitioned")
-    val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
+    head.flatMap(_.state.schema).foreach(evolveSchema(_, df.schema))
+    val vcs = enforceConstraints(head, df, "transactionalAppendPartitioned")
+    val (sCols, bCols) = inheritTracking(head, df, statsCols, bloomCols)
     val f = fs(spark, dir)
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
@@ -2555,7 +2553,7 @@ object SnapshotTable {
     val (stats, blooms) = summarizeBatch(spark, dir, batchDir, listed,
       (partitionBy ++ sCols).distinct, bCols, strictBlooms = false)
     val refs = writeBloomSidecar(spark, dir, batch, blooms)
-    commitAppend(spark, dir, df.schema, added, stats, refs, bCols,
+    commitAppend(spark, dir, head, df.schema, added, stats, refs, bCols,
       maxRetries, "transactionalAppendPartitioned",
       txn = Some(appId -> txnVersion), addedSizes = sizes,
       validatedConstraints = vcs)
@@ -2607,25 +2605,22 @@ object SnapshotTable {
     * table has no mapping — the legacy path is byte-identical to
     * before), and the possibly-repointed stats/bloom lists.
     *
-    * `basis`: the table state `df`'s LOGICAL column names were
-    * resolved against. CoW/MoR rewrites MUST pass their base state —
-    * their frame was built by reading at base, so a rename landing
-    * between the base read and this write would otherwise have the
-    * batch written under the NEW mapping while the frame's names are
-    * the OLD logical ones (silent wrong physical names → NULLs on
-    * every read). With the base as the claim's compare point, the
-    * commit loop's [[checkMapClaim]] turns that race into a loud
-    * ConcurrentModificationException. Appends (frame authored by the
-    * caller against the current table) default to the head. */
+    * `basis`: the snapshot `df`'s LOGICAL column names were resolved
+    * against (None: a table with no commit yet) — the operation's own
+    * snapshot. A rename landing between that read and this write would
+    * otherwise have the batch written under the NEW mapping while the
+    * frame's names are the OLD logical ones (silent wrong physical
+    * names → NULLs on every read); with the basis as the claim's
+    * compare point, the commit loop's [[checkMapClaim]] turns that
+    * race into a loud ConcurrentModificationException. */
   private def writeBatch(df: DataFrame, dir: String,
+                         basis: Option[Snapshot],
                          statsCols: Seq[String],
                          bloomCols: Seq[String] = Nil,
-                         strictBlooms: Boolean = true,
-                         basis: Option[TableState] = None
+                         strictBlooms: Boolean = true
                         ): WrittenBatch = {
     val spark = df.sparkSession
-    val baseSt = basis.orElse(
-      latestVersion(spark, dir).map(stateOf(spark, dir, _)))
+    val baseSt = basis.map(_.state)
     val baseMap = baseSt.map(_.colMap).getOrElse(Map.empty)
     val baseRet = baseSt.map(_.retired).getOrElse(Seq.empty)
     var sCols = statsCols
@@ -2722,15 +2717,15 @@ object SnapshotTable {
                           maxRetries: Int = 20): Option[Long] = {
     require(appId.nonEmpty, "transactionalAppend: appId must be non-empty")
     val spark = df.sparkSession
+    val head = headSnapshot(spark, dir)
     // Cheap pre-check saves the data write on the common replay path;
     // the authoritative check re-runs inside the commit loop.
-    val pre = latestVersion(spark, dir)
-      .map(manifestTxns(spark, dir, _)).getOrElse(Map.empty)
-    if (pre.getOrElse(appId, Long.MinValue) >= txnVersion) return None
-    val vcs = enforceConstraints(spark, dir, df, "transactionalAppend")
-    val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val wb = writeBatch(df, dir, sCols, bCols, strictBlooms = false)
-    commitAppend(spark, dir, df.schema, wb.added, wb.stats, wb.refs,
+    if (head.exists(h => replayed(h.state, Some(appId -> txnVersion))))
+      return None
+    val vcs = enforceConstraints(head, df, "transactionalAppend")
+    val (sCols, bCols) = inheritTracking(head, df, statsCols, bloomCols)
+    val wb = writeBatch(df, dir, head, sCols, bCols, strictBlooms = false)
+    commitAppend(spark, dir, head, df.schema, wb.added, wb.stats, wb.refs,
       wb.bloomCols, maxRetries, "transactionalAppend",
       txn = Some(appId -> txnVersion), addedSizes = wb.sizes,
       validatedConstraints = vcs, claim = wb.claim)
@@ -2765,7 +2760,8 @@ object SnapshotTable {
                  txnVersion: Long, maxRetries: Int = 20): Option[Long] = {
     require(appId.nonEmpty, "advanceTxn: appId must be non-empty")
     val txn = Some(appId -> txnVersion)
-    commitLoop(spark, dir, "advanceTxn", maxRetries) { st =>
+    commitLoop(spark, dir, headSnapshot(spark, dir), "advanceTxn",
+        maxRetries) { st =>
       val base = headState(st, "advanceTxn", dir)
       if (replayed(base, txn)) None
       else Some(base.copy(txns = base.txns ++ txn))
@@ -2782,21 +2778,8 @@ object SnapshotTable {
     * invisible. An uninitialized table is an error (no schema to
     * return). */
   def read(spark: SparkSession, dir: String,
-           version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(s"read: no committed version under $dir"))
-    val files = manifestFiles(spark, dir, v)
-    val schema = manifestSchema(spark, dir, v)
-    if (files.isEmpty)
-      schema.map(st => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st))
-        .getOrElse(spark.emptyDataFrame)
-    else {
-      val st = stateOf(spark, dir, v)
-      readFilesWithDv(spark, dir, files, schema, st.dvRefs, st.colMap,
-        st.defaults)
-    }
-  }
+           version: Option[Long] = None): DataFrame =
+    readSnapshot(spark, dir, snapshot(spark, dir, version, "read"))
 
   /** The manifest-level file-pruning decision for
     * `column BETWEEN lower AND upper` (inclusive): returns (files to
@@ -2816,45 +2799,46 @@ object SnapshotTable {
   def pruneFilesBounds(spark: SparkSession, dir: String, column: String,
                        lower: Option[Any], upper: Option[Any],
                        version: Option[Long] = None): (Seq[String], Int) = {
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(s"pruneFiles: no committed version under $dir"))
-    // Stats are keyed by PHYSICAL column name; the caller's predicate
-    // names the LOGICAL one.
-    pruneFilesBoundsPhys(spark, dir,
-      physName(stateOf(spark, dir, v).colMap, column), lower, upper, v)
+    val snap = snapshot(spark, dir, version, "pruneFiles")
+    (pruneFilesBoundsPhys(snap.state, snap.state.files, physCol(snap, column),
+      lower, upper), snap.state.files.length)
   }
 
-  /** [[pruneFilesBounds]] with `pc` ALREADY physical — the
-    * scan-relation path ([[SnapshotFileIndex]]) pushes filters whose
-    * attribute names come from the physical scan schema; translating
-    * them again through the logical→physical map would mis-prune
-    * swapped-name tables. */
-  private[sources] def pruneFilesBoundsPhys(spark: SparkSession,
-                       dir: String, pc: String,
-                       lower: Option[Any], upper: Option[Any],
-                       v: Long): (Seq[String], Int) = {
-    val files = manifestFiles(spark, dir, v)
-    val stats = manifestStats(spark, dir, v)
-    val selected = files.filter { file =>
+  /** Stats and Bloom summaries are keyed by PHYSICAL column name; a
+    * caller's predicate names the LOGICAL one. */
+  private def physCol(snap: Snapshot, column: String): String =
+    physName(snap.state.colMap, column)
+
+  /** The files among `files` whose recorded [min,max] for physical
+    * column `pc` may hold a value within the (open-sided) bounds;
+    * files or columns without stats are always kept. `pc` is ALREADY
+    * physical — the scan-relation path ([[SnapshotFileIndex]]) pushes
+    * filters whose attribute names come from the physical scan
+    * schema; translating them again through the logical→physical map
+    * would mis-prune swapped-name tables. */
+  private[sources] def pruneFilesBoundsPhys(st: TableState,
+                       files: Seq[String], pc: String,
+                       lower: Option[Any], upper: Option[Any]): Seq[String] = {
+    val stats = st.stats
+    files.filter { file =>
       stats.get(file).flatMap(_.get(pc)) match {
         case None => true
-        case Some(st) =>
+        case Some(cs) =>
           val okLo = lower.forall { l =>
             (for {
-              lo <- canonBound(st.tag, l)
-              cMaxLo <- statCompare(st.tag, st.max, lo)
+              lo <- canonBound(cs.tag, l)
+              cMaxLo <- statCompare(cs.tag, cs.max, lo)
             } yield cMaxLo >= 0).getOrElse(true)
           }
           val okHi = upper.forall { h =>
             (for {
-              hi <- canonBound(st.tag, h)
-              cMinHi <- statCompare(st.tag, st.min, hi)
+              hi <- canonBound(cs.tag, h)
+              cMinHi <- statCompare(cs.tag, cs.min, hi)
             } yield cMinHi <= 0).getOrElse(true)
           }
           okLo && okHi
       }
     }
-    (selected, files.length)
   }
 
   /** Range read with manifest-stats file skipping: opens only the
@@ -2864,18 +2848,9 @@ object SnapshotTable {
     * rows, so the result is identical to filtering a full [[read]]). */
   def readWhere(spark: SparkSession, dir: String, column: String,
                 lower: Any, upper: Any,
-                version: Option[Long] = None): DataFrame = {
-    val (selected, _) = pruneFiles(spark, dir, column, lower, upper, version)
-    val residual = col(column) >= lit(lower) && col(column) <= lit(upper)
-    if (selected.isEmpty) read(spark, dir, version).filter(lit(false))
-    else {
-      val v = version.orElse(latestVersion(spark, dir)).get
-      val st = stateOf(spark, dir, v)
-      readFilesWithDv(spark, dir, selected, manifestSchema(spark, dir, v),
-        st.dvRefs, st.colMap, st.defaults)
-        .filter(residual)
-    }
-  }
+                version: Option[Long] = None): DataFrame =
+    readWhereAll(spark, dir, Seq((column, lower, upper)), version,
+      op = "pruneFiles")
 
   /** Conjunctive multi-predicate read: `AND` of
     * `column BETWEEN lower AND upper` bounds. File pruning is the
@@ -2886,22 +2861,22 @@ object SnapshotTable {
     * identical to filtering a full [[read]]. */
   def readWhereAll(spark: SparkSession, dir: String,
                    bounds: Seq[(String, Any, Any)],
-                   version: Option[Long] = None): DataFrame = {
+                   version: Option[Long] = None): DataFrame =
+    readWhereAll(spark, dir, bounds, version, op = "readWhereAll")
+
+  private def readWhereAll(spark: SparkSession, dir: String,
+                           bounds: Seq[(String, Any, Any)],
+                           version: Option[Long], op: String): DataFrame = {
     require(bounds.nonEmpty, "readWhereAll: at least one predicate required")
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(
-        s"readWhereAll: no committed version under $dir"))
-    val selected = bounds
-      .map { case (c, lo, hi) => pruneFiles(spark, dir, c, lo, hi, Some(v))._1.toSet }
-      .reduce(_ intersect _)
+    val snap = snapshot(spark, dir, version, op)
+    val selected = bounds.foldLeft(snap.state.files) { case (fs, (c, lo, hi)) =>
+      pruneFilesBoundsPhys(snap.state, fs, physCol(snap, c), Some(lo), Some(hi))
+    }
     val residual = bounds
       .map { case (c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi) }
       .reduce(_ && _)
-    if (selected.isEmpty) read(spark, dir, Some(v)).filter(lit(false))
-    else readFilesWithDv(spark, dir, selected.toSeq.sorted,
-      manifestSchema(spark, dir, v), stateOf(spark, dir, v).dvRefs,
-      stateOf(spark, dir, v).colMap, stateOf(spark, dir, v).defaults)
-      .filter(residual)
+    if (selected.isEmpty) noRows(spark, dir, snap)
+    else readFilesWithDv(spark, dir, snap, selected).filter(residual)
   }
 
   /** Bulk key-set file pruning by STATS ENVELOPE — the above-cap
@@ -2914,15 +2889,14 @@ object SnapshotTable {
     * conservative, never wrong: a file outside a column's envelope
     * cannot hold ANY key of the set (stats ignore NULLs, and NULL
     * keys never equi-join anyway). Returns the surviving files. */
-  private[graft] def pruneFilesEnvelope(spark: SparkSession, dir: String,
-                                        v: Long,
+  private[graft] def pruneFilesEnvelope(snap: Snapshot,
                                         bounds: Seq[(String, Any, Any)]
                                        ): Seq[String] = {
-    val sets = bounds.collect { case (c, lo, hi) if lo != null && hi != null =>
-      pruneFiles(spark, dir, c, lo, hi, Some(v))._1.toSet
-    }
-    if (sets.isEmpty) manifestFiles(spark, dir, v)
-    else sets.reduce(_ intersect _).toSeq.sorted
+    val usable = bounds.filter { case (_, lo, hi) => lo != null && hi != null }
+    if (usable.isEmpty) snap.state.files
+    else usable.foldLeft(snap.state.files) { case (fs, (c, lo, hi)) =>
+      pruneFilesBoundsPhys(snap.state, fs, physCol(snap, c), Some(lo), Some(hi))
+    }.sorted
   }
 
   /** Read the files a bulk key set could possibly live in — envelope
@@ -2933,16 +2907,10 @@ object SnapshotTable {
   def readWhereKeyEnvelope(spark: SparkSession, dir: String,
                            bounds: Seq[(String, Any, Any)],
                            version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(
-        s"readWhereKeyEnvelope: no committed version under $dir"))
-    val kept = pruneFilesEnvelope(spark, dir, v, bounds)
-    if (kept.isEmpty) read(spark, dir, Some(v)).filter(lit(false))
-    else {
-      val st = stateOf(spark, dir, v)
-      readFilesWithDv(spark, dir, kept, manifestSchema(spark, dir, v),
-        st.dvRefs, st.colMap, st.defaults)
-    }
+    val snap = snapshot(spark, dir, version, "readWhereKeyEnvelope")
+    val kept = pruneFilesEnvelope(snap, bounds)
+    if (kept.isEmpty) noRows(spark, dir, snap)
+    else readFilesWithDv(spark, dir, snap, kept)
   }
 
   /** Multi-value point lookup — `column IN (values)` with Bloom +
@@ -2960,11 +2928,9 @@ object SnapshotTable {
                      version: Option[Long] = None,
                      semiJoinThreshold: Int = 256): DataFrame = {
     require(values.nonEmpty, "readWhereEqAny: at least one value required")
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(
-        s"readWhereEqAny: no committed version under $dir"))
-    val st = stateOf(spark, dir, v)
-    val pc = physName(st.colMap, column)
+    val snap = snapshot(spark, dir, version, "readWhereEqAny")
+    val st = snap.state
+    val pc = physCol(snap, column)
     // A WIDE IN-list flips from per-value pruning to a broadcast
     // semi-join: the per-value path costs O(values × files) driver
     // work plus a values-long In literal, both of which stop scaling
@@ -2981,13 +2947,13 @@ object SnapshotTable {
       val kept = scala.util.Try(
         (distinctVals.min(ord), distinctVals.max(ord))).toOption match {
         case Some((lo, hi)) =>
-          pruneFilesBoundsPhys(spark, dir, pc, Some(lo), Some(hi), v)._1
+          pruneFilesBoundsPhys(st, st.files, pc, Some(lo), Some(hi))
         case None => st.files // non-comparable values: no envelope
       }
-      if (kept.isEmpty) return read(spark, dir, Some(v)).filter(lit(false))
-      val dt = manifestSchema(spark, dir, v)
+      if (kept.isEmpty) return noRows(spark, dir, snap)
+      val dt = st.schema
         .flatMap(_.fields.find(_.name == column).map(_.dataType))
-        .getOrElse(read(spark, dir, Some(v)).schema(column).dataType)
+        .getOrElse(readSnapshot(spark, dir, snap).schema(column).dataType)
       // The probe frame is TYPED BY THE VALUES and then cast to the
       // table's column type — createDataFrame against `dt` directly
       // would crash on boxed-type mismatches (Integer values probing
@@ -3017,32 +2983,28 @@ object SnapshotTable {
           })): _*),
         StructType(Seq(StructField(column, valDt))))
         .select(col(column).cast(dt).as(column))
-      return readFilesWithDv(spark, dir, kept,
-        manifestSchema(spark, dir, v), st.dvRefs, st.colMap, st.defaults)
+      return readFilesWithDv(spark, dir, snap, kept)
         .join(broadcast(probe), Seq(column), "left_semi")
     }
     val ranged: Seq[(Any, Seq[String])] = values.map(x =>
-      x -> pruneFilesBoundsPhys(spark, dir, pc, Some(x), Some(x), v)._1)
-    val needed = ranged.iterator.flatMap(_._2).toSet
-    val neededRefs = st.bloomRefs.view.filterKeys(needed).toMap
-    val blooms = st.legacyBlooms ++ neededRefs.groupBy(_._2).flatMap {
-      case (ref, fileRefs) =>
-        val side = loadBloomSidecar(spark, dir, ref)
-        fileRefs.keys.flatMap(f => sidecarLookup(side, f, ref).map(f -> _))
-    }
+      x -> pruneFilesBoundsPhys(st, st.files, pc, Some(x), Some(x)))
+    val blooms = bloomsOf(spark, dir, st, ranged.flatMap(_._2))
     val selected = ranged.flatMap { case (x, files) =>
-      files.filter { file =>
-        blooms.get(file).flatMap(_.get(pc)) match {
-          case None => true
-          case Some(bits) => bloomMightContain(bits, x)
-        }
-      }
+      files.filter(f => mightContain(blooms, f, pc, Seq(x)))
     }.distinct.sorted
-    if (selected.isEmpty) read(spark, dir, Some(v)).filter(lit(false))
-    else readFilesWithDv(spark, dir, selected,
-      manifestSchema(spark, dir, v), st.dvRefs, st.colMap, st.defaults)
+    if (selected.isEmpty) noRows(spark, dir, snap)
+    else readFilesWithDv(spark, dir, snap, selected)
       .filter(col(column).isin(values: _*))
   }
+
+  /** Whether `file`'s Bloom bitset for physical column `pc` might
+    * contain any of `values` — true when the file has no bitset for
+    * it. */
+  private def mightContain(blooms: Map[String, Map[String, Array[Byte]]],
+                           file: String, pc: String,
+                           values: Seq[Any]): Boolean =
+    blooms.get(file).flatMap(_.get(pc))
+      .forall(bits => values.exists(bloomMightContain(bits, _)))
 
   /** Point-lookup file pruning for `column = value`: a file is opened
     * only if BOTH summaries allow it — its min/max range contains the
@@ -3052,38 +3014,23 @@ object SnapshotTable {
   def pruneFilesEq(spark: SparkSession, dir: String, column: String,
                    value: Any,
                    version: Option[Long] = None): (Seq[String], Int) = {
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(
-        s"pruneFilesEq: no committed version under $dir"))
-    pruneFilesEqPhys(spark, dir,
-      physName(stateOf(spark, dir, v).colMap, column), value, v)
+    val snap = snapshot(spark, dir, version, "pruneFilesEq")
+    (pruneFilesEqPhys(spark, dir, snap.state, snap.state.files,
+      physCol(snap, column), value), snap.state.files.length)
   }
 
-  /** [[pruneFilesEq]] with `pc` ALREADY physical (see
-    * [[pruneFilesBoundsPhys]]). */
+  /** The files among `files` [[pruneFilesEq]] keeps, with `pc` ALREADY
+    * physical (see [[pruneFilesBoundsPhys]]). Sidecar-lazy: only the
+    * sidecars of files that survived range pruning load — a point
+    * lookup on a well-clustered table reads O(selected files) bloom
+    * bytes, not O(table). */
   private[sources] def pruneFilesEqPhys(spark: SparkSession, dir: String,
-                   pc: String, value: Any, v: Long): (Seq[String], Int) = {
-    val (rangeKept, total) =
-      pruneFilesBoundsPhys(spark, dir, pc, Some(value), Some(value), v)
-    // Sidecar-lazy probe: load only the sidecars of files that
-    // survived range pruning — a point lookup on a well-clustered
-    // table reads O(selected files) bloom bytes, not O(table).
-    val st = stateOf(spark, dir, v)
-    val rangeSet = rangeKept.toSet
-    val neededRefs = st.bloomRefs.view.filterKeys(rangeSet).toMap
-    val bySidecar = neededRefs.groupBy(_._2)
-    val blooms = st.legacyBlooms ++ bySidecar.flatMap {
-      case (ref, fileRefs) =>
-        val side = loadBloomSidecar(spark, dir, ref)
-        fileRefs.keys.flatMap(f => sidecarLookup(side, f, ref).map(f -> _))
-    }
-    val selected = rangeKept.filter { file =>
-      blooms.get(file).flatMap(_.get(pc)) match {
-        case None => true
-        case Some(bits) => bloomMightContain(bits, value)
-      }
-    }
-    (selected, total)
+                                        st: TableState, files: Seq[String],
+                                        pc: String, value: Any): Seq[String] = {
+    val rangeKept =
+      pruneFilesBoundsPhys(st, files, pc, Some(value), Some(value))
+    val blooms = bloomsOf(spark, dir, st, rangeKept)
+    rangeKept.filter(f => mightContain(blooms, f, pc, Seq(value)))
   }
 
   /** Equality read with manifest Bloom + stats file skipping: opens
@@ -3093,15 +3040,12 @@ object SnapshotTable {
     * table scale). */
   def readWhereEq(spark: SparkSession, dir: String, column: String,
                   value: Any, version: Option[Long] = None): DataFrame = {
-    val (selected, _) = pruneFilesEq(spark, dir, column, value, version)
-    if (selected.isEmpty) read(spark, dir, version).filter(lit(false))
-    else {
-      val v = version.orElse(latestVersion(spark, dir)).get
-      val st = stateOf(spark, dir, v)
-      readFilesWithDv(spark, dir, selected, manifestSchema(spark, dir, v),
-        st.dvRefs, st.colMap, st.defaults)
-        .filter(col(column) === lit(value))
-    }
+    val snap = snapshot(spark, dir, version, "pruneFilesEq")
+    val selected = pruneFilesEqPhys(spark, dir, snap.state, snap.state.files,
+      physCol(snap, column), value)
+    if (selected.isEmpty) noRows(spark, dir, snap)
+    else readFilesWithDv(spark, dir, snap, selected)
+      .filter(col(column) === lit(value))
   }
 
   /** File pruning for a BOUNDED, COLLECTED key set — the touched-file
@@ -3126,15 +3070,14 @@ object SnapshotTable {
     * equi-join key of NULL matches no row). Returns a sound SUPERSET
     * of the files holding matching keys — the caller's exact semi-join
     * stays the row-level decision, this only bounds what it scans. */
-  def pruneFilesForKeys(spark: SparkSession, dir: String, v: Long,
-                        keyCols: Seq[String],
+  private[graft] def pruneFilesForKeys(spark: SparkSession, dir: String,
+                        snap: Snapshot, keyCols: Seq[String],
                         keyRows: Seq[org.apache.spark.sql.Row]): Seq[String] = {
-    val st = stateOf(spark, dir, v)
-    val stats = manifestStats(spark, dir, v)
+    val st = snap.state
     var kept = st.files
     keyCols.zipWithIndex.foreach { case (c, i) =>
       if (kept.nonEmpty) {
-        val pc = physName(st.colMap, c)
+        val pc = physCol(snap, c)
         val vals = keyRows.iterator.map(_.get(i)).filter(_ != null)
           .toArray.distinct
         if (vals.isEmpty) kept = Nil // all-NULL key column: no match
@@ -3155,7 +3098,7 @@ object SnapshotTable {
                   .getOrElse(throw new IllegalStateException) < 0)).toOption
             })
           kept = kept.filter { f =>
-            stats.get(f).flatMap(_.get(pc)) match {
+            st.stats.get(f).flatMap(_.get(pc)) match {
               case None => true
               case Some(cs) => canonSorted(cs.tag) match {
                 case None => true
@@ -3176,20 +3119,9 @@ object SnapshotTable {
           }
           if (kept.nonEmpty &&
               vals.length.toLong * kept.length <= 4000000L) {
-            val keptSet = kept.toSet
-            val neededRefs = st.bloomRefs.view.filterKeys(keptSet).toMap
-            val blooms = st.legacyBlooms ++ neededRefs.groupBy(_._2).flatMap {
-              case (ref, fileRefs) =>
-                val side = loadBloomSidecar(spark, dir, ref)
-                fileRefs.keys.flatMap(f =>
-                  sidecarLookup(side, f, ref).map(f -> _))
-            }
-            kept = kept.filter { f =>
-              blooms.get(f).flatMap(_.get(pc)) match {
-                case None => true
-                case Some(bits) => vals.exists(bloomMightContain(bits, _))
-              }
-            }
+            val blooms = bloomsOf(spark, dir, st, kept)
+            kept = kept.filter(f =>
+              mightContain(blooms, f, pc, vals.toIndexedSeq))
           }
         }
       }
@@ -3209,22 +3141,16 @@ object SnapshotTable {
                       keyCols: Seq[String], keyRows: Seq[org.apache.spark.sql.Row],
                       version: Option[Long] = None): DataFrame = {
     require(keyCols.nonEmpty, "readWhereKeySet: at least one key column")
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(
-        s"readWhereKeySet: no committed version under $dir"))
-    val base = read(spark, dir, Some(v))
+    val snap = snapshot(spark, dir, version, "readWhereKeySet")
+    val base = readSnapshot(spark, dir, snap)
     if (keyRows.isEmpty) return base.filter(lit(false))
     val probe = spark.createDataFrame(
       java.util.Arrays.asList(keyRows: _*),
       StructType(keyCols.map(c => base.schema(c))))
-    val cand = pruneFilesForKeys(spark, dir, v, keyCols, keyRows)
+    val cand = pruneFilesForKeys(spark, dir, snap, keyCols, keyRows)
     if (cand.isEmpty) base.filter(lit(false))
-    else {
-      val st = stateOf(spark, dir, v)
-      readFilesWithDv(spark, dir, cand, manifestSchema(spark, dir, v),
-        st.dvRefs, st.colMap, st.defaults)
-        .join(broadcast(probe), keyCols, "left_semi")
-    }
+    else readFilesWithDv(spark, dir, snap, cand)
+      .join(broadcast(probe), keyCols, "left_semi")
   }
 
   /** Row-level CHANGE FEED between two committed versions — the CDC
@@ -3245,11 +3171,12 @@ object SnapshotTable {
                  fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion,
       s"changeFeed: fromVersion $fromVersion > toVersion $toVersion")
+    val to = snapshot(spark, dir, Some(toVersion), "changeFeed")
     val fromSt = stateOf(spark, dir, fromVersion)
-    val toSt = stateOf(spark, dir, toVersion)
+    val toSt = to.state
     val fromFiles = fromSt.files
     val toFiles = toSt.files
-    val schema = manifestSchema(spark, dir, toVersion)
+    val schema = toSt.schema
     val dropped = fromFiles.filterNot(toFiles.toSet)
     val added = toFiles.filterNot(fromFiles.toSet)
     // A merge-on-read delete changes rows WITHOUT changing the file
@@ -3260,21 +3187,23 @@ object SnapshotTable {
     val fromSet = fromFiles.toSet
     val dvChanged = toFiles.filter(f =>
       fromSet.contains(f) && fromSt.dvRefs.get(f) != toSt.dvRefs.get(f))
-    // Both sides resolve under TO-version's column mapping (physical
-    // names are rename-stable, so old files read correctly under it)
-    // — a feed spanning a rename surfaces end-state logical names
-    // throughout, exactly like the schema discipline above.
-    def side(files: Seq[String], refs: Map[String, String]): DataFrame =
-      if (files.nonEmpty)
-        readFilesWithDv(spark, dir, files, schema, refs, toSt.colMap,
-          toSt.defaults)
+    // Both sides resolve under TO-version's schema, column mapping and
+    // defaults (physical names are rename-stable, so old files read
+    // correctly under it) — a feed spanning a rename surfaces
+    // end-state logical names throughout, exactly like the schema
+    // discipline above. The old side keeps FROM's vectors (and its
+    // files' sizes and stats).
+    val fromUnderTo = Snapshot(fromVersion, fromSt.copy(schema = schema,
+      colMap = toSt.colMap, defaults = toSt.defaults))
+    def side(snap: Snapshot, files: Seq[String]): DataFrame =
+      if (files.nonEmpty) readFilesWithDv(spark, dir, snap, files)
       else schema.map(st => spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st))
-        .getOrElse(read(spark, dir, Some(toVersion)).filter(lit(false)))
+        .getOrElse(noRows(spark, dir, to))
     val oldFiles = dropped ++ dvChanged
     val newFiles = added ++ dvChanged
-    val oldRows = side(oldFiles, fromSt.dvRefs)
-    val newRows = side(newFiles, toSt.dvRefs)
+    val oldRows = side(fromUnderTo, oldFiles)
+    val newRows = side(to, newFiles)
     // The multiset difference needs its two exceptAll shuffles only
     // when BOTH sides carry rows. A pure append (old side statically
     // empty — the overwhelmingly common commit) is its added rows
@@ -3334,7 +3263,7 @@ object SnapshotTable {
         }
         val outCols = schema.map(_.fieldNames.toSeq)
           .getOrElse(newRows.columns.toSeq)
-        withFile(spark, dir, toVersion, Some(dvChanged), applyDv = false)
+        withFile(spark, dir, to, Some(dvChanged), applyDv = false)
           .join(broadcast(delta),
             col("__file") === col("__dv_file") &&
               col("__row_index") === col("__dv_rowidx"), "left_semi")
@@ -3359,7 +3288,10 @@ object SnapshotTable {
     * fully readable (their files are untouched until [[vacuum]]).
     * If an append commits concurrently, the commit loop re-bases:
     * files added since the compaction read are carried forward
-    * unchanged — only the files actually rewritten are swapped out.
+    * unchanged — only the files actually rewritten are swapped out. A
+    * concurrent rewrite of a compacted file (delete, update, merge, or
+    * a new deletion vector on it) fails the compaction with
+    * ConcurrentModificationException instead.
     *
     * `clusterBy` range-repartitions + sorts the rewrite on the given
     * columns, making per-file ranges (near-)disjoint so that
@@ -3399,9 +3331,8 @@ object SnapshotTable {
     require(bucketBy.nonEmpty || bucketSortBy.isEmpty,
       "compact: bucketSortBy requires bucketBy")
     val f = fs(spark, dir)
-    val base = latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(s"compact: no committed version under $dir"))
-    val baseSt = stateOf(spark, dir, base)
+    val snap = snapshot(spark, dir, None, "compact")
+    val baseSt = snap.state
     val old = baseSt.files
     if (old.isEmpty) return None
     // Manifest sizes when recorded (every writer since r7); RPC
@@ -3431,8 +3362,7 @@ object SnapshotTable {
     // Deletion vectors applied: the rewrite MATERIALIZES merge-on-read
     // deletes — compaction is also the vector-purge operation.
     val baseDv = baseSt.dvRefs
-    val src = readFilesWithDv(spark, dir, old, baseSt.schema, baseDv, cm,
-      baseSt.defaults)
+    val src = readFilesWithDv(spark, dir, snap, old)
     val bucketLayout = if (bucketBy.isEmpty) None
       else Some(BucketLayout(numBuckets, bucketBy, bucketSortBy))
     bucketLayout match {
@@ -3472,12 +3402,20 @@ object SnapshotTable {
     val (rewrittenStats, rwBlooms) = summarizeBatch(spark, dir, batchDir,
       rewrittenList, trackedCols, trackedBlooms, strictBlooms = false)
     val rewrittenRefs = writeBloomSidecar(spark, dir, batch, rwBlooms)
-    commitLoop(spark, dir, "compact", maxRetries) { st =>
+    commitLoop(spark, dir, Some(snap), "compact", maxRetries) { st =>
       val curSt = headState(st, "compact", dir)
       if (curSt.colMap != cm || curSt.retired != cRet)
         throw new java.util.ConcurrentModificationException(
           "compact: the table's column mapping changed during the " +
             "rewrite (a concurrent renameColumn/dropColumn) — retry")
+      // A compacted file a concurrent delete/update/merge rewrote since
+      // our read: carrying its rewrite forward next to ours would
+      // resurrect the rows that commit removed — conflict, loudly.
+      val missing = old.filterNot(curSt.files.toSet)
+      if (missing.nonEmpty)
+        throw new java.util.ConcurrentModificationException(
+          s"compact: compacted files rewritten concurrently: " +
+            missing.take(3).mkString(", "))
       // A deletion vector advanced on a compacted file since our read
       // would be silently dropped by the rewrite — conflict, loudly.
       val dvMoved = old.filter(f => curSt.dvRefs.get(f) != baseDv.get(f))
@@ -3521,12 +3459,10 @@ object SnapshotTable {
                    targetBytes: Long = 128L * 1024 * 1024,
                    maxRetries: Int = 20): Option[Long] = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val base = latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"compactWhere: no committed version under $dir"))
-    val (candidates, _) =
-      pruneFiles(spark, dir, column, lower, upper, Some(base))
-    compactFiles(spark, dir, base, candidates.sorted, targetBytes,
+    val snap = snapshot(spark, dir, None, "compactWhere")
+    val candidates = pruneFilesBoundsPhys(snap.state, snap.state.files,
+      physCol(snap, column), Some(lower), Some(upper))
+    compactFiles(spark, dir, snap, candidates.sorted, targetBytes,
       "compactWhere", maxRetries)
   }
 
@@ -3545,16 +3481,14 @@ object SnapshotTable {
     require(smallerThanBytes > 0,
       s"smallerThanBytes must be positive, got $smallerThanBytes")
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val base = latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"binPackSmall: no committed version under $dir"))
-    val st = stateOf(spark, dir, base)
+    val snap = snapshot(spark, dir, None, "binPackSmall")
+    val st = snap.state
     val f = fs(spark, dir)
     val candidates = st.files.filter { p =>
       st.sizes.getOrElse(p,
         f.getFileStatus(new Path(dir, p)).getLen) < smallerThanBytes
     }.sorted
-    compactFiles(spark, dir, base, candidates, targetBytes,
+    compactFiles(spark, dir, snap, candidates, targetBytes,
       "binPackSmall", maxRetries)
   }
 
@@ -3566,11 +3500,11 @@ object SnapshotTable {
     * surface (a candidate rewritten or re-vectored concurrently
     * throws). No-op (None) when the candidates are already at or
     * under the packed count with no vectors to materialize. */
-  private def compactFiles(spark: SparkSession, dir: String, base: Long,
+  private def compactFiles(spark: SparkSession, dir: String, snap: Snapshot,
                            candidates: Seq[String], targetBytes: Long,
                            op: String, maxRetries: Int): Option[Long] = {
     if (candidates.isEmpty) return None
-    val st = stateOf(spark, dir, base)
+    val st = snap.state
     val f = fs(spark, dir)
     val totalBytes = candidates.map(p => st.sizes.getOrElse(p,
       f.getFileStatus(new Path(dir, p)).getLen)).sum
@@ -3579,13 +3513,9 @@ object SnapshotTable {
     if (candidates.length <= nTarget &&
         !candidates.exists(st.dvRefs.contains))
       return None
-    val src = readFilesWithDv(spark, dir, candidates,
-      manifestSchema(spark, dir, base), st.dvRefs, st.colMap, st.defaults)
-      .coalesce(nTarget)
-    commitRewrite(spark, dir, candidates, src,
-      trackedStatsCols(spark, dir, base),
-      trackedBloomCols(spark, dir, base), maxRetries, op,
-      baseDv = st.dvRefs, basis = Some(st))
+    val src = readFilesWithDv(spark, dir, snap, candidates).coalesce(nTarget)
+    commitRewrite(spark, dir, candidates, src, trackedStatsCols(snap),
+      st.bloomCols, maxRetries, op, base = Some(snap))
   }
 
   /** The interleaved-bit z-value of `cols` over `src`'s value ranges —
@@ -3649,9 +3579,7 @@ object SnapshotTable {
     // `CLONE … VERSION AS OF` shape) — an experiment forks from last
     // week's snapshot in one manifest write; the clone's own lifecycle
     // is independent of what the source committed since.
-    val v = versionAsOf.getOrElse(latestVersion(spark, srcDir).getOrElse(
-      throw new java.io.IOException(
-        s"shallowClone: no committed version under $srcDir")))
+    val st = snapshot(spark, srcDir, versionAsOf, "shallowClone").state
     require(latestVersion(spark, dstDir).isEmpty,
       s"shallowClone: destination $dstDir already has commits")
     def absolutize(e: String): String =
@@ -3662,7 +3590,6 @@ object SnapshotTable {
       if (r.startsWith("_blooms/") || r.startsWith("_dv/"))
         new Path(new Path(srcDir), r).toUri.getPath
       else r
-    val st = stateOf(spark, srcDir, v)
     val files = st.files.map(absolutize)
     val stats = st.stats.map { case (k, cs) => absolutize(k) -> cs }
     // Bloom and deletion-vector SIDECARS reference-carry exactly like
@@ -3691,18 +3618,6 @@ object SnapshotTable {
     0L
   }
 
-  /** The CHECK constraints recorded at version `v` (name → SQL
-    * expression). */
-  def manifestConstraints(spark: SparkSession, dir: String,
-                          v: Long): Map[String, String] =
-    stateOf(spark, dir, v).constraints
-
-  /** The column initial-defaults recorded at version `v`:
-    * column → (canonical literal, pre-ADD file keys still live). */
-  def manifestDefaults(spark: SparkSession, dir: String, v: Long
-                      ): Map[String, (String, Set[String])] =
-    stateOf(spark, dir, v).defaults
-
   /** Record a CHECK constraint (the public `ALTER TABLE … ADD
     * CONSTRAINT … CHECK (expr)` shape): `exprSql` must hold — SQL
     * CHECK semantics, violated only when the expression evaluates to
@@ -3717,17 +3632,15 @@ object SnapshotTable {
   def addConstraint(spark: SparkSession, dir: String, name: String,
                     exprSql: String, maxRetries: Int = 20): Long = {
     require(name.nonEmpty, "addConstraint: name must be non-empty")
-    val base = latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"addConstraint: no committed version under $dir"))
+    val snap = snapshot(spark, dir, None, "addConstraint")
     // Parse errors AND existing-data violations surface here, before
     // any manifest changes.
-    val bad = read(spark, dir, Some(base))
+    val bad = readSnapshot(spark, dir, snap)
       .filter(not(coalesce(expr(exprSql), lit(true)))).limit(1).collect()
     if (bad.nonEmpty) throw new IllegalArgumentException(
       s"addConstraint: existing rows violate $name ($exprSql), e.g. " +
         bad.head.mkString(","))
-    commitLoop(spark, dir, "addConstraint", maxRetries) { st =>
+    commitLoop(spark, dir, Some(snap), "addConstraint", maxRetries) { st =>
       val base = headState(st, "addConstraint", dir)
       require(!base.constraints.contains(name),
         s"addConstraint: constraint $name already exists " +
@@ -3740,12 +3653,10 @@ object SnapshotTable {
     * version. */
   def dropConstraint(spark: SparkSession, dir: String, name: String,
                      maxRetries: Int = 20): Long = {
-    val base = latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"dropConstraint: no committed version under $dir"))
-    require(stateOf(spark, dir, base).constraints.contains(name),
+    val snap = snapshot(spark, dir, None, "dropConstraint")
+    require(snap.state.constraints.contains(name),
       s"dropConstraint: no such constraint $name")
-    commitLoop(spark, dir, "dropConstraint", maxRetries) { st =>
+    commitLoop(spark, dir, Some(snap), "dropConstraint", maxRetries) { st =>
       val base = headState(st, "dropConstraint", dir)
       Some(base.copy(constraints = base.constraints - name))
     }.get
@@ -3754,11 +3665,6 @@ object SnapshotTable {
   // ------------------------------------------------------------------
   // Table properties (the TBLPROPERTIES surface)
   // ------------------------------------------------------------------
-
-  /** The table properties recorded at version `v`. */
-  def manifestProps(spark: SparkSession, dir: String,
-                    v: Long): Map[String, String] =
-    stateOf(spark, dir, v).props
 
   /** The property key that flips SQL DELETE/UPDATE from copy-on-write
     * to MERGE-ON-READ deletion vectors (the public Delta
@@ -3792,7 +3698,7 @@ object SnapshotTable {
   private def commitProps(spark: SparkSession, dir: String,
                           f: Map[String, String] => Map[String, String],
                           op: String, maxRetries: Int): Long =
-    commitLoop(spark, dir, op, maxRetries) { st =>
+    commitLoop(spark, dir, headSnapshot(spark, dir), op, maxRetries) { st =>
       val base = headState(st, op, dir)
       Some(base.copy(props = f(base.props)))
     }.get
@@ -3800,19 +3706,6 @@ object SnapshotTable {
   // ------------------------------------------------------------------
   // Column mapping admin ops (metadata-only RENAME / DROP COLUMN)
   // ------------------------------------------------------------------
-
-  /** The column mapping recorded at version `v` (logical → physical,
-    * SPARSE — identity columns are absent). Empty = logical and
-    * physical names coincide (every table until its first rename). */
-  def manifestColMap(spark: SparkSession, dir: String,
-                     v: Long): Map[String, String] =
-    stateOf(spark, dir, v).colMap
-
-  /** Physical names of DROPPED columns at version `v` — still present
-    * in old data files, never served, never reused. */
-  def manifestRetired(spark: SparkSession, dir: String,
-                      v: Long): Seq[String] =
-    stateOf(spark, dir, v).retired
 
   /** The first recorded CHECK constraint whose SQL mentions column
     * `c` (word-boundary match — conservative: a false positive
@@ -3841,7 +3734,8 @@ object SnapshotTable {
                    to: String, maxRetries: Int = 20): Long = {
     require(to.nonEmpty, "renameColumn: target name must be non-empty")
     require(from != to, s"renameColumn: $from -> $to is a no-op")
-    commitLoop(spark, dir, "renameColumn", maxRetries) { head =>
+    commitLoop(spark, dir, headSnapshot(spark, dir), "renameColumn",
+        maxRetries) { head =>
       val st = headState(head, "renameColumn", dir)
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"renameColumn: table under $dir records no schema (legacy " +
@@ -3892,9 +3786,7 @@ object SnapshotTable {
   def addColumn(spark: SparkSession, dir: String, column: String,
                 dt: DataType, maxRetries: Int = 20,
                 default: Option[Any] = None): Long = {
-    latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"addColumn: no committed version under $dir"))
+    val snap = snapshot(spark, dir, None, "addColumn")
     // DEFAULT <literal>: recorded in the manifest as a canonical
     // string and served (cast to `dt`) for exactly the files present
     // at this ADD — Iceberg's initial-default semantics. Validated by
@@ -3909,7 +3801,7 @@ object SnapshotTable {
         s"addColumn: default '$str' does not cast to ${dt.simpleString}")
       str
     }
-    commitLoop(spark, dir, "addColumn", maxRetries) { head =>
+    commitLoop(spark, dir, Some(snap), "addColumn", maxRetries) { head =>
       val st = headState(head, "addColumn", dir)
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"addColumn: table under $dir records no schema (legacy " +
@@ -3938,7 +3830,8 @@ object SnapshotTable {
 
   def widenColumn(spark: SparkSession, dir: String, column: String,
                   to: DataType, maxRetries: Int = 20): Long =
-    commitLoop(spark, dir, "widenColumn", maxRetries) { head =>
+    commitLoop(spark, dir, headSnapshot(spark, dir), "widenColumn",
+        maxRetries) { head =>
       val st = headState(head, "widenColumn", dir)
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"widenColumn: table under $dir records no schema (legacy " +
@@ -3980,7 +3873,8 @@ object SnapshotTable {
     * committed version. */
   def dropColumn(spark: SparkSession, dir: String, column: String,
                  maxRetries: Int = 20): Long =
-    commitLoop(spark, dir, "dropColumn", maxRetries) { head =>
+    commitLoop(spark, dir, headSnapshot(spark, dir), "dropColumn",
+        maxRetries) { head =>
       val st = headState(head, "dropColumn", dir)
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"dropColumn: table under $dir records no schema (legacy " +
@@ -4014,11 +3908,9 @@ object SnapshotTable {
     * (NULL passes); a constraint whose columns the batch doesn't
     * carry resolves against the NULL backfill, i.e. passes (caught as
     * the analysis error it raises on the batch frame). */
-  private def enforceConstraints(spark: SparkSession, dir: String,
-                                 df: DataFrame,
+  private def enforceConstraints(head: Option[Snapshot], df: DataFrame,
                                  op: String): Map[String, String] = {
-    val cs = latestVersion(spark, dir)
-      .map(stateOf(spark, dir, _).constraints).getOrElse(Map.empty)
+    val cs = head.map(_.state.constraints).getOrElse(Map.empty)
     enforceConstraintSet(cs, df, op)
     cs // the VALIDATED set — commit loops re-check against it when a
        // concurrent addConstraint rebases them onto a stricter head
@@ -4058,13 +3950,12 @@ object SnapshotTable {
       // Constraint SQL is written against LOGICAL names; the batch
       // files carry physical ones — probe through the rename.
       val frame =
-        if (colMap.isEmpty) readFiles(spark, dir, added, schema)
+        if (colMap.isEmpty) readFiles(spark, dir, EmptyState, added, schema)
         else {
           val logical = schema.getOrElse(throw new IllegalStateException(
             s"$op: column mapping active under $dir but no schema"))
-          toLogicalFrame(
-            readFiles(spark, dir, added, Some(physSchemaOf(colMap, logical))),
-            colMap, logical)
+          toLogicalFrame(readFiles(spark, dir, EmptyState, added,
+            Some(physSchemaOf(colMap, logical))), colMap, logical)
         }
       enforceConstraintSet(fresh, frame, op)
     }
@@ -4104,12 +3995,10 @@ object SnapshotTable {
               maxRetries: Int = 20): Option[Long] = {
     val f = fs(spark, dir)
     val target = stateOf(spark, dir, toVersion) // throws once vacuumed
-    val cur = latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"restore: no committed version under $dir"))
-    require(toVersion <= cur,
-      s"restore: target v$toVersion is beyond the head v$cur")
-    commitLoop(spark, dir, "restore", maxRetries) { head =>
+    val cur = snapshot(spark, dir, None, "restore")
+    require(toVersion <= cur.version,
+      s"restore: target v$toVersion is beyond the head v${cur.version}")
+    commitLoop(spark, dir, Some(cur), "restore", maxRetries) { head =>
       val curSt = headState(head, "restore", dir)
       // The no-op check covers exactly the state a restore REINSTATES
       // (files, vectors, schema, mapping, bucket). Constraints/props
@@ -4359,13 +4248,8 @@ object SnapshotTable {
 
   /** Columns the current manifest tracks stats for — rewrites keep
     * tracking them so data skipping survives row-level ops. */
-  private def trackedStatsCols(spark: SparkSession, dir: String,
-                               v: Long): Seq[String] =
-    manifestStats(spark, dir, v).values.flatMap(_.keys).toSeq.distinct
-
-  private def trackedBloomCols(spark: SparkSession, dir: String,
-                               v: Long): Seq[String] =
-    stateOf(spark, dir, v).bloomCols
+  private def trackedStatsCols(snap: Snapshot): Seq[String] =
+    snap.state.stats.values.flatMap(_.keys).toSeq.distinct
 
   /** The current snapshot (deletion vectors applied — a row-level op
     * must never see, match, or rewrite a MoR-deleted row) with a
@@ -4373,12 +4257,12 @@ object SnapshotTable {
     * `__row_index` its in-file position. Both are computed at the
     * SCAN (from `_metadata`) because a post-join `input_file_name()`
     * is undefined. */
-  private def withFile(spark: SparkSession, dir: String, v: Long,
+  private def withFile(spark: SparkSession, dir: String, snap: Snapshot,
                        only: Option[Seq[String]] = None,
                        applyDv: Boolean = true): DataFrame = {
-    val st = stateOf(spark, dir, v)
+    val st = snap.state
     val files = only.getOrElse(st.files)
-    val schema = manifestSchema(spark, dir, v)
+    val schema = st.schema
     // Under an active column mapping the scan reads PHYSICAL names;
     // the final select below renames to logical, so callers' keys and
     // predicates resolve as users wrote them.
@@ -4387,7 +4271,7 @@ object SnapshotTable {
       else Some(physSchemaOf(st.colMap, schema.getOrElse(
         throw new IllegalStateException(
           s"column mapping active under $dir but no recorded schema"))))
-    val base = readFiles(spark, dir, files, physSchema)
+    val base = readFiles(spark, dir, st, files, physSchema)
     val cols = base.columns.map(col)
     val keyed0 = base.select(cols :+
       fileKeyExpr(dir, col("_metadata.file_path")).as("__file") :+
@@ -4448,24 +4332,17 @@ object SnapshotTable {
     * file-count-bounded control plane. */
   def deleteWhere(spark: SparkSession, dir: String, condition: Column,
                   maxRetries: Int = 20): Option[Long] = {
-    val base = latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(s"deleteWhere: no committed version under $dir"))
-    if (manifestFiles(spark, dir, base).isEmpty) return None
+    val snap = snapshot(spark, dir, None, "deleteWhere")
+    if (snap.state.files.isEmpty) return None
     val touched = probe(spark, "delete-where:touched-probe") {
-      collectFileCol(withFile(spark, dir, base).filter(condition), "__file")
+      collectFileCol(withFile(spark, dir, snap).filter(condition), "__file")
         .map(manifestKey(dir, _)).sorted
     }
     if (touched.isEmpty) return None
-    val baseDv = stateOf(spark, dir, base).dvRefs
     val survivors =
-      readFilesWithDv(spark, dir, touched, manifestSchema(spark, dir, base),
-        baseDv, stateOf(spark, dir, base).colMap,
-        stateOf(spark, dir, base).defaults)
-        .filter(not(condition))
-    commitRewrite(spark, dir, touched, survivors,
-      trackedStatsCols(spark, dir, base),
-      trackedBloomCols(spark, dir, base), maxRetries, "deleteWhere",
-      baseDv = baseDv, basis = Some(stateOf(spark, dir, base)))
+      readFilesWithDv(spark, dir, snap, touched).filter(not(condition))
+    commitRewrite(spark, dir, touched, survivors, trackedStatsCols(snap),
+      snap.state.bloomCols, maxRetries, "deleteWhere", base = Some(snap))
   }
 
   /** Copy-on-write row UPDATE — the remaining corner of the CRUD
@@ -4488,29 +4365,24 @@ object SnapshotTable {
     require(set.map(_._1).distinct.length == set.length,
       s"updateWhere: duplicate SET columns: " +
         s"${set.map(_._1).diff(set.map(_._1).distinct).distinct.mkString(", ")}")
-    val base = latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(s"updateWhere: no committed version under $dir"))
-    val schema = manifestSchema(spark, dir, base)
+    val snap = snapshot(spark, dir, None, "updateWhere")
     // Typo'd-SET guard must hold on pre-schema-recording manifests
     // too (schema == None): fall back to the table's read schema —
     // otherwise a misspelled column silently no-ops the update.
-    val fieldNames = schema.map(_.fieldNames.toSeq)
-      .getOrElse(read(spark, dir, Some(base)).columns.toSeq)
+    val fieldNames = snap.state.schema.map(_.fieldNames.toSeq)
+      .getOrElse(readSnapshot(spark, dir, snap).columns.toSeq)
     set.foreach { case (c, _) =>
       require(fieldNames.contains(c),
         s"updateWhere: SET column $c does not exist (columns: " +
           s"${fieldNames.mkString(", ")})")
     }
-    if (manifestFiles(spark, dir, base).isEmpty) return None
+    if (snap.state.files.isEmpty) return None
     val touched = probe(spark, "update-where:touched-probe") {
-      collectFileCol(withFile(spark, dir, base).filter(condition), "__file")
+      collectFileCol(withFile(spark, dir, snap).filter(condition), "__file")
         .map(manifestKey(dir, _)).sorted
     }
     if (touched.isEmpty) return None
-    val baseDv = stateOf(spark, dir, base).dvRefs
-    val src = readFilesWithDv(spark, dir, touched, schema, baseDv,
-      stateOf(spark, dir, base).colMap,
-      stateOf(spark, dir, base).defaults)
+    val src = readFilesWithDv(spark, dir, snap, touched)
     // All SET expressions see the PRE-update row: project them in one
     // select, not a fold of withColumn (which would let later SETs
     // read earlier SETs' outputs — not SQL UPDATE semantics).
@@ -4521,12 +4393,10 @@ object SnapshotTable {
         case None => col(c)
       }
     }: _*)
-    val vcs = enforceConstraints(spark, dir, rewritten, "updateWhere")
-    commitRewrite(spark, dir, touched, rewritten,
-      trackedStatsCols(spark, dir, base),
-      trackedBloomCols(spark, dir, base), maxRetries, "updateWhere",
-      baseDv = baseDv, checkConstraints = Some(vcs),
-      basis = Some(stateOf(spark, dir, base)))
+    val vcs = enforceConstraints(Some(snap), rewritten, "updateWhere")
+    commitRewrite(spark, dir, touched, rewritten, trackedStatsCols(snap),
+      snap.state.bloomCols, maxRetries, "updateWhere",
+      checkConstraints = Some(vcs), base = Some(snap))
   }
 
   /** MERGE-ON-READ row DELETE — the write-cheap sibling of
@@ -4552,16 +4422,14 @@ object SnapshotTable {
     * the committed version; None when nothing matched. */
   def deleteWhereMor(spark: SparkSession, dir: String, condition: Column,
                      maxRetries: Int = 20): Option[Long] = {
-    val base = latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"deleteWhereMor: no committed version under $dir"))
-    val baseSt = stateOf(spark, dir, base)
+    val snap = snapshot(spark, dir, None, "deleteWhereMor")
+    val baseSt = snap.state
     if (baseSt.files.isEmpty) return None
     // Matches among LIVE rows only (existing vectors applied): a
     // row already masked must not land in the new vector twice.
     // Persisted: the affected-files collect and the vector write both
     // consume it — uncached each re-runs the scan + DV anti-join.
-    val matches = withFile(spark, dir, base)
+    val matches = withFile(spark, dir, snap)
       .filter(condition)
       .select(col("__file").as("file"), col("__row_index").as("row_index"))
       .persist()
@@ -4582,7 +4450,7 @@ object SnapshotTable {
     labeled(spark, "delete-mor:vector-write") {
       internalWrite(vector, new Path(dir, ref).toString)
     }
-    commitLoop(spark, dir, "deleteWhereMor", maxRetries,
+    commitLoop(spark, dir, Some(snap), "deleteWhereMor", maxRetries,
         recordAs = Some("deleteMor")) { head =>
       val curSt = headState(head, "deleteWhereMor", dir)
       val missing = affected.filterNot(curSt.files.toSet)
@@ -4626,14 +4494,11 @@ object SnapshotTable {
     require(set.map(_._1).distinct.length == set.length,
       s"updateWhereMor: duplicate SET columns: " +
         s"${set.map(_._1).diff(set.map(_._1).distinct).distinct.mkString(", ")}")
-    val base = latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"updateWhereMor: no committed version under $dir"))
-    val baseSt = stateOf(spark, dir, base)
+    val snap = snapshot(spark, dir, None, "updateWhereMor")
+    val baseSt = snap.state
     if (baseSt.files.isEmpty) return None
-    val schema = manifestSchema(spark, dir, base)
-    val fieldNames = schema.map(_.fieldNames.toSeq)
-      .getOrElse(read(spark, dir, Some(base)).columns.toSeq)
+    val fieldNames = baseSt.schema.map(_.fieldNames.toSeq)
+      .getOrElse(readSnapshot(spark, dir, snap).columns.toSeq)
     set.foreach { case (c, _) =>
       require(fieldNames.contains(c),
         s"updateWhereMor: SET column $c does not exist (columns: " +
@@ -4645,7 +4510,7 @@ object SnapshotTable {
     // from this frame — uncached, each would re-run the full
     // scan + DV anti-join, betraying the op's write-cost-∝-matched-
     // rows pitch.
-    val matches = withFile(spark, dir, base).filter(condition).persist()
+    val matches = withFile(spark, dir, snap).filter(condition).persist()
     try {
     val positions = matches.select(col("__file").as("file"),
       col("__row_index").as("row_index"))
@@ -4658,11 +4523,10 @@ object SnapshotTable {
     val setMap = set.toMap
     val updated = matches.select(fieldNames.map(c =>
       setMap.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-    var validated = enforceConstraints(spark, dir, updated, "updateWhereMor")
-    // basis = base state: `updated` carries base-version logical names
-    val wb = writeBatch(updated, dir, trackedStatsCols(spark, dir, base),
-        trackedBloomCols(spark, dir, base), strictBlooms = false,
-        basis = Some(baseSt))
+    var validated = enforceConstraints(Some(snap), updated, "updateWhereMor")
+    // basis = the snapshot: `updated` carries its logical names
+    val wb = writeBatch(updated, dir, Some(snap), trackedStatsCols(snap),
+      baseSt.bloomCols, strictBlooms = false)
     // Cumulative vector per affected file: previous positions ∪ new.
     val prior = dvRows(spark, dir, baseSt.dvRefs, affected)
       .map(_.filter(col("__dv_file").isin(affected: _*))
@@ -4675,7 +4539,7 @@ object SnapshotTable {
     labeled(spark, "update-mor:vector-write") {
       internalWrite(vector, new Path(dir, ref).toString)
     }
-    commitLoop(spark, dir, "updateWhereMor", maxRetries,
+    commitLoop(spark, dir, Some(snap), "updateWhereMor", maxRetries,
         recordAs = Some("updateMor")) { head =>
       val curSt = headState(head, "updateWhereMor", dir)
       checkMapClaim(Some(curSt), wb.claim, "updateWhereMor")
@@ -4718,7 +4582,8 @@ object SnapshotTable {
     * (union by name). Returns the committed version. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
             keys: Seq[String], maxRetries: Int = 20): Long =
-    mergeImpl(spark, dir, source, keys, None, maxRetries).getOrElse(
+    mergeImpl(spark, dir, headSnapshot(spark, dir), source, keys, None,
+        maxRetries).getOrElse(
       throw new IllegalStateException("merge: rewrite commit returned no version"))
 
   /** EXACTLY-ONCE MERGE for replayable writers — [[merge]] under the
@@ -4735,52 +4600,48 @@ object SnapshotTable {
                          appId: String, txnVersion: Long,
                          maxRetries: Int = 20): Option[Long] = {
     require(appId.nonEmpty, "transactionalMerge: appId must be non-empty")
-    val pre = latestVersion(spark, dir)
-      .map(manifestTxns(spark, dir, _)).getOrElse(Map.empty)
-    if (pre.getOrElse(appId, Long.MinValue) >= txnVersion) return None
-    mergeImpl(spark, dir, source, keys, Some(appId -> txnVersion), maxRetries)
+    val head = headSnapshot(spark, dir)
+    val txn = Some(appId -> txnVersion)
+    if (head.exists(h => replayed(h.state, txn))) return None
+    mergeImpl(spark, dir, head, source, keys, txn, maxRetries)
   }
 
-  private def mergeImpl(spark: SparkSession, dir: String, source: DataFrame,
+  /** `head`: the target's snapshot — None for an uninitialized table,
+    * a valid merge target where everything inserts (what a streaming
+    * CDC apply's FIRST micro-batch needs). */
+  private def mergeImpl(spark: SparkSession, dir: String,
+                        head: Option[Snapshot], source: DataFrame,
                         keys: Seq[String], txn: Option[(String, Long)],
                         maxRetries: Int): Option[Long] = {
     require(keys.nonEmpty, "merge: at least one key column required")
-    // An uninitialized table is a valid merge target: everything
-    // inserts (what a streaming CDC apply's FIRST micro-batch needs).
-    val base = latestVersion(spark, dir)
     // Only SOURCE rows introduce new values — carried rows were
     // validated when they landed.
-    val vcs = enforceConstraints(spark, dir, source, "merge")
+    val vcs = enforceConstraints(head, source, "merge")
     val dupKeys = source.groupBy(keys.map(col): _*)
       .count().filter(col("count") > 1).limit(1).collect()
     require(dupKeys.isEmpty,
       s"merge: source has duplicate keys, e.g. ${dupKeys.head.mkString(",")}")
     val srcKeys = source.select(keys.map(col): _*).distinct()
-    val touched = base match {
-      case Some(v) if manifestFiles(spark, dir, v).nonEmpty =>
-        collectFileCol(withFile(spark, dir, v)
+    val touched = head match {
+      case Some(snap) if snap.state.files.nonEmpty =>
+        collectFileCol(withFile(spark, dir, snap)
           .join(srcKeys, keys, "left_semi"), "__file")
           .map(manifestKey(dir, _)).sorted
       case _ => Seq.empty[String]
     }
-    val baseDv = base.map(stateOf(spark, dir, _).dvRefs).getOrElse(Map.empty)
-    val rewrite =
-      if (touched.isEmpty) source
-      else readFilesWithDv(spark, dir, touched,
-          base.flatMap(manifestSchema(spark, dir, _)), baseDv,
-          base.map(stateOf(spark, dir, _).colMap).getOrElse(Map.empty),
-          base.map(stateOf(spark, dir, _).defaults).getOrElse(Map.empty))
+    val rewrite = head.filter(_ => touched.nonEmpty) match {
+      case None => source
+      case Some(snap) => readFilesWithDv(spark, dir, snap, touched)
         .join(srcKeys, keys, "left_anti")
         .unionByName(source)
+    }
     commitRewrite(spark, dir, touched, rewrite,
-      base.map(trackedStatsCols(spark, dir, _)).getOrElse(Nil),
-      base.map(trackedBloomCols(spark, dir, _)).getOrElse(Nil),
+      head.map(trackedStatsCols).getOrElse(Nil),
+      head.map(_.state.bloomCols).getOrElse(Nil),
       maxRetries, "merge", txn,
       keyConflict = Some((
-        base.map(manifestFiles(spark, dir, _)).getOrElse(Nil).toSet,
-        keys, srcKeys)),
-      baseDv = baseDv, checkConstraints = Some(vcs),
-      basis = base.map(stateOf(spark, dir, _)))
+        head.map(_.state.files).getOrElse(Nil).toSet, keys, srcKeys)),
+      checkConstraints = Some(vcs), base = head)
   }
 
   /** One action of a generalized [[mergeInto]] clause. Expression
@@ -4894,13 +4755,12 @@ object SnapshotTable {
       a => a.isInstanceOf[Insert] || a == InsertAll)
     checkGroup("WHEN NOT MATCHED BY SOURCE", notMatchedBySource,
       a => a.isInstanceOf[Update] || a == Delete)
-    val base = latestVersion(spark, dir).getOrElse(throw
+    val snap = headSnapshot(spark, dir).getOrElse(throw
       new java.io.IOException(s"mergeInto: no committed version under " +
         s"$dir — initialize the table first (the whole-row merge " +
         "accepts an empty target)"))
-    val st = stateOf(spark, dir, base)
-    val schema = manifestSchema(spark, dir, base)
-      .getOrElse(read(spark, dir, Some(base)).schema)
+    val st = snap.state
+    val schema = st.schema.getOrElse(readSnapshot(spark, dir, snap).schema)
     val fieldNames = schema.fieldNames.toSet
     keys.foreach(k => require(fieldNames.contains(k),
       s"mergeInto: key column $k is not in the target schema"))
@@ -4962,7 +4822,7 @@ object SnapshotTable {
     val keyFiles =
       if (!hasFiles || !srcHasRows || (matched.isEmpty && notMatched.isEmpty))
         Seq.empty[String]
-      else collectFileCol(withFile(spark, dir, base)
+      else collectFileCol(withFile(spark, dir, snap)
         .join(srcKeys, keys, "left_semi"), "__file")
         .map(manifestKey(dir, _))
     val touchedMatch = if (matched.isEmpty) Seq.empty[String] else keyFiles
@@ -4971,7 +4831,7 @@ object SnapshotTable {
       else {
         val anyCond = notMatchedBySource
           .map(_.condition.map(expr).getOrElse(lit(true))).reduce(_ || _)
-        collectFileCol(withFile(spark, dir, base).alias(targetAlias)
+        collectFileCol(withFile(spark, dir, snap).alias(targetAlias)
           .join(srcKeys, keys, "left_anti").filter(anyCond), "__file")
           .map(manifestKey(dir, _))
       }
@@ -4986,8 +4846,7 @@ object SnapshotTable {
     val tParts = Seq(touched -> true, holderOnly -> false)
       .filter(_._1.nonEmpty)
       .map { case (files, rw) =>
-        readFilesWithDv(spark, dir, files, Some(schema), st.dvRefs,
-          st.colMap, st.defaults).withColumn(RW, lit(rw))
+        readFilesWithDv(spark, dir, snap, files).withColumn(RW, lit(rw))
       }
     val tFrame =
       (if (tParts.isEmpty)
@@ -5059,16 +4918,13 @@ object SnapshotTable {
     val resultAll = joined.select(valueCols :+ keepCol :+ newCol: _*)
     val introduced = resultAll.filter(col(KEEP) && col(NEW))
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    val vcs = enforceConstraints(spark, dir, introduced, "mergeInto")
+    val vcs = enforceConstraints(Some(snap), introduced, "mergeInto")
     val rewrite = resultAll.filter(col(KEEP))
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    commitRewrite(spark, dir, touched, rewrite,
-      trackedStatsCols(spark, dir, base),
-      trackedBloomCols(spark, dir, base),
-      maxRetries, "mergeInto", None,
+    commitRewrite(spark, dir, touched, rewrite, trackedStatsCols(snap),
+      st.bloomCols, maxRetries, "mergeInto", None,
       keyConflict = Some((st.files.toSet, keys, srcKeys)),
-      baseDv = st.dvRefs, checkConstraints = Some(vcs),
-      basis = Some(st), readOnly = holderOnly)
+      checkConstraints = Some(vcs), base = Some(snap), readOnly = holderOnly)
   }
 
   /** Apply a CDC batch — rows tagged by a `_change` column with
@@ -5091,13 +4947,10 @@ object SnapshotTable {
     require(keys.nonEmpty, "applyChanges: at least one key column required")
     require(changes.columns.contains("_change"),
       "applyChanges: changes must carry a _change column (insert|delete)")
+    val head = headSnapshot(spark, dir)
     // Ledger pre-check FIRST: a replayed batch must be a no-op without
     // even scanning the change frame.
-    txn.foreach { case (appId, tv) =>
-      val pre = latestVersion(spark, dir)
-        .map(manifestTxns(spark, dir, _)).getOrElse(Map.empty)
-      if (pre.getOrElse(appId, Long.MinValue) >= tv) return None
-    }
+    if (head.exists(h => replayed(h.state, txn))) return None
     val inserts = changes.filter(col("_change") === "insert").drop("_change")
     // The affected key set — every key any change row names. (The
     // insert∪(delete∖insert) formulation this replaces is the same
@@ -5201,7 +5054,7 @@ object SnapshotTable {
       }
     }
     // Only the insert half introduces new values.
-    val vcs = enforceConstraints(spark, dir, inserts, "applyChanges")
+    val vcs = enforceConstraints(head, inserts, "applyChanges")
     // BOUNDED-KEY-SET FILE PRUNING. The touched-file probe's semi-join
     // is exact but, unpruned, SCANS the whole table per apply — at a
     // 100 TB dimension that scan IS the operation's cost. The
@@ -5220,11 +5073,10 @@ object SnapshotTable {
         java.util.Arrays.asList(rows.toSeq: _*), keySchema))
       case None => affectedKeysFull
     }
-    val base = latestVersion(spark, dir)
-    val touched = base match {
-      case Some(v) if manifestFiles(spark, dir, v).nonEmpty =>
+    val touched = head match {
+      case Some(snap) if snap.state.files.nonEmpty =>
         val candidates = collectedKeys
-          .map(rows => pruneFilesForKeys(spark, dir, v, keys, rows))
+          .map(rows => pruneFilesForKeys(spark, dir, snap, keys, rows))
           .orElse {
             // above the cap: stats-envelope pruning instead of an
             // unpruned table scan. The envelope rode the validation
@@ -5236,17 +5088,16 @@ object SnapshotTable {
                   keyEnvelopeAggs.tail: _*).collect()(0)
                 envelopeOf(r, 0)
               })
-            Some(pruneFilesEnvelope(spark, dir, v, env))
+            Some(pruneFilesEnvelope(snap, env))
           }
         if (candidates.exists(_.isEmpty)) Seq.empty[String]
         else probe(spark, "apply-changes:touched-probe") {
-          collectFileCol(withFile(spark, dir, v, candidates)
+          collectFileCol(withFile(spark, dir, snap, candidates)
             .join(affectedKeys, keys, "left_semi"), "__file")
             .map(manifestKey(dir, _)).sorted
         }
       case _ => Seq.empty[String]
     }
-    val baseDv = base.map(stateOf(spark, dir, _).dvRefs).getOrElse(Map.empty)
     // WRITE SIZING for the bounded case: when the fused collect
     // bounded the key set, the insert half is key-unique and at most
     // pruneKeyLimit rows — but it arrives carrying the caller's full
@@ -5267,23 +5118,19 @@ object SnapshotTable {
         inserts.coalesce(math.max(1L, math.min(1024L, target)).toInt)
       case None => inserts
     }
-    val rewrite =
-      if (touched.isEmpty) insertsSized
-      else readFilesWithDv(spark, dir, touched,
-          base.flatMap(manifestSchema(spark, dir, _)), baseDv,
-          base.map(stateOf(spark, dir, _).colMap).getOrElse(Map.empty),
-          base.map(stateOf(spark, dir, _).defaults).getOrElse(Map.empty))
+    val rewrite = head.filter(_ => touched.nonEmpty) match {
+      case None => insertsSized
+      case Some(snap) => readFilesWithDv(spark, dir, snap, touched)
         .join(affectedKeys, keys, "left_anti")
         .unionByName(insertsSized, allowMissingColumns = true)
+    }
     commitRewrite(spark, dir, touched, rewrite,
-      base.map(trackedStatsCols(spark, dir, _)).getOrElse(Nil),
-      base.map(trackedBloomCols(spark, dir, _)).getOrElse(Nil),
+      head.map(trackedStatsCols).getOrElse(Nil),
+      head.map(_.state.bloomCols).getOrElse(Nil),
       maxRetries, "applyChanges", txn,
       keyConflict = Some((
-        base.map(manifestFiles(spark, dir, _)).getOrElse(Nil).toSet,
-        keys, affectedKeys)),
-      baseDv = baseDv, checkConstraints = Some(vcs),
-      basis = base.map(stateOf(spark, dir, _)))
+        head.map(_.state.files).getOrElse(Nil).toSet, keys, affectedKeys)),
+      checkConstraints = Some(vcs), base = head)
   }
 
   /** EXACTLY-ONCE incremental table-to-table replication: advance the
@@ -5318,9 +5165,7 @@ object SnapshotTable {
     val srcV = latestVersion(spark, srcDir).getOrElse(
       throw new java.io.IOException(
         s"replicate: no committed version under $srcDir"))
-    val cursor = latestVersion(spark, dstDir)
-      .map(manifestTxns(spark, dstDir, _)).getOrElse(Map.empty)
-      .get(appId)
+    val cursor = headSnapshot(spark, dstDir).flatMap(_.state.txns.get(appId))
     if (cursor.exists(_ >= srcV)) return None
     val feed = cursor match {
       case Some(c) =>
@@ -5375,20 +5220,23 @@ object SnapshotTable {
                             txn: Option[(String, Long)] = None,
                             keyConflict: Option[(Set[String], Seq[String],
                               DataFrame)] = None,
-                            baseDv: Map[String, String] = Map.empty,
                             checkConstraints: Option[Map[String, String]] =
                               None,
-                            basis: Option[TableState] = None,
+                            base: Option[Snapshot] = None,
                             readOnly: Seq[String] = Nil
                            ): Option[Long] = {
+    // The snapshot the rewrite was built from — its logical names
+    // (writeBatch's column-mapping race contract) and its deletion
+    // vectors (the conflict check below) — and the commit's first
+    // base; a caller that built from no snapshot gets the head.
+    val head = base.orElse(headSnapshot(spark, dir))
+    val baseDv = head.map(_.state.dvRefs).getOrElse(Map.empty)
     // strictBlooms=false: bloomCols here is the table's RECORDED
     // tracking list — legacy ineligible entries drop, never wedge a
-    // row-level op on a pre-r7 table. basis = the state the rewrite
-    // frame's logical names were resolved against (see writeBatch's
-    // column-mapping race contract).
+    // row-level op on a pre-r7 table.
     val wb = labeled(spark, op) {
-      writeBatch(rewrite, dir, statsCols, bloomCols,
-        strictBlooms = false, basis = basis)
+      writeBatch(rewrite, dir, head, statsCols, bloomCols,
+        strictBlooms = false)
     }
     val (added, addedStats, addedRefs, addedSizes, claim) =
       (wb.added, wb.stats, wb.refs, wb.sizes, wb.claim)
@@ -5397,9 +5245,9 @@ object SnapshotTable {
     // None = this op introduces no new values (delete/compaction);
     // Some(v) = the set the caller validated — recheck on rebase.
     var validated = checkConstraints
-    commitLoop(spark, dir, op, maxRetries) { head =>
-      checkMapClaim(head, claim, op)
-      val curSt = head.getOrElse(EmptyState)
+    commitLoop(spark, dir, head, op, maxRetries) { st =>
+      checkMapClaim(st, claim, op)
+      val curSt = st.getOrElse(EmptyState)
       // a racing replay won; our files stay orphaned
       if (replayed(curSt, txn)) None
       else {
@@ -5428,12 +5276,13 @@ object SnapshotTable {
             // probe through the rename under an active mapping.
             val cm = claim.map(_.colMap).getOrElse(Map.empty)
             val probeFrame =
-              if (cm.isEmpty) readFiles(spark, dir, newSinceBase, curSt.schema)
+              if (cm.isEmpty)
+                readFiles(spark, dir, curSt, newSinceBase, curSt.schema)
               else {
                 val logical = curSt.schema.getOrElse(
                   throw new IllegalStateException(
                     s"$op: column mapping active under $dir but no schema"))
-                toLogicalFrame(readFiles(spark, dir, newSinceBase,
+                toLogicalFrame(readFiles(spark, dir, curSt, newSinceBase,
                   Some(physSchemaOf(cm, logical))), cm, logical)
               }
             val clash = probeFrame

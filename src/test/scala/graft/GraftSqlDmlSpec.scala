@@ -217,8 +217,8 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     val afterDel = SnapshotTable.read(spark, dir)
     assert(afterDel.filter(col("rank") === 7).count() == 4)
     assert(afterDel.filter(col("rank").isNull).count() == 1)
-    val headDefs = SnapshotTable.manifestDefaults(spark, dir,
-      SnapshotTable.latestVersion(spark, dir).get)
+    val headDefs = SnapshotTable.snapshot(spark, dir,
+      Some(SnapshotTable.latestVersion(spark, dir).get), "spec").state.defaults
     assert(headDefs.get("rank").forall(_._2.subsetOf(before)),
       "rewritten files must leave the pre-ADD set")
     // time travel: pre-ADD versions have no column; restore rolls the
@@ -227,8 +227,8 @@ class GraftSqlDmlSpec extends AnyFunSuite {
       .columns.contains("rank"))
     spark.sql(s"RESTORE sqldml_adddef TO VERSION AS OF 0")
     assert(!SnapshotTable.read(spark, dir).columns.contains("rank"))
-    assert(SnapshotTable.manifestDefaults(spark, dir,
-      SnapshotTable.latestVersion(spark, dir).get).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir,
+      Some(SnapshotTable.latestVersion(spark, dir).get), "spec").state.defaults.isEmpty)
     // a default that cannot cast is refused up front
     intercept[IllegalArgumentException] {
       spark.sql(
@@ -366,7 +366,7 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     assert(r.getLong(1) == 10L)
     val v1 = SnapshotTable.latestVersion(spark, dir).get
     assert(SnapshotTable.manifestFiles(spark, dir, v1).toSet == filesBefore)
-    assert(SnapshotTable.manifestDvRefs(spark, dir, v1).nonEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, Some(v1), "spec").state.dvRefs.nonEmpty)
     assert(SnapshotTable.read(spark, dir).count() == 90)
     // MoR UPDATE: masked old rows + new files, values correct
     spark.sql("UPDATE sqldml_props SET score = score + 1000000 WHERE id < 5")
@@ -376,21 +376,21 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     // OPTIMIZE materializes the vectors
     spark.sql("OPTIMIZE sqldml_props")
     val v3 = SnapshotTable.latestVersion(spark, dir).get
-    assert(SnapshotTable.manifestDvRefs(spark, dir, v3).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, Some(v3), "spec").state.dvRefs.isEmpty)
     assert(SnapshotTable.read(spark, dir).count() == 90)
     // UNSET flips back to copy-on-write: the touched file is REWRITTEN
     spark.sql("ALTER TABLE sqldml_props UNSET TBLPROPERTIES " +
       "('graft.enableDeletionVectors')")
     spark.sql("DELETE FROM sqldml_props WHERE id = 0")
     val v4 = SnapshotTable.latestVersion(spark, dir).get
-    assert(SnapshotTable.manifestDvRefs(spark, dir, v4).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, Some(v4), "spec").state.dvRefs.isEmpty)
     assert(SnapshotTable.read(spark, dir).count() == 89)
     assert(spark.sql("SHOW TBLPROPERTIES sqldml_props").collect()
       .map(_.getString(0)).toSeq == Seq("owner"))
     // properties survive a shallow clone
     val cloneDir = tmp("props-clone")
     SnapshotTable.shallowClone(spark, dir, cloneDir)
-    assert(SnapshotTable.manifestProps(spark, cloneDir, 0L) ==
+    assert(SnapshotTable.snapshot(spark, cloneDir, Some(0L), "spec").state.props ==
       Map("owner" -> "etl"))
   }
 
@@ -559,8 +559,8 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     val bdir = tmp("ctas-bucket")
     spark.sql(s"CREATE TABLE graft.`$bdir` CLUSTERED BY (id) " +
       "SORTED BY (id) INTO 4 BUCKETS AS SELECT id, id * 2 AS v FROM range(40)")
-    val b = SnapshotTable.manifestBucket(spark, bdir,
-      SnapshotTable.latestVersion(spark, bdir).get)
+    val b = SnapshotTable.snapshot(spark, bdir,
+      Some(SnapshotTable.latestVersion(spark, bdir).get), "spec").state.bucket
     assert(b.exists(s => s.numBuckets == 4 && s.cols == Seq("id")))
     assert(SnapshotTable.read(spark, bdir).count() == 40)
     // OR REPLACE with a layout clause is refused loudly

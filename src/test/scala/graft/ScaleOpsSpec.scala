@@ -536,8 +536,8 @@ class ScaleOpsSpec extends AnyFunSuite {
       (5000L, "new", 1L, "insert") // fresh key, no file holds it
     ).toDF("id", "v", "g", "_change")
     val v0 = SnapshotTable.latestVersion(spark, pruned).get
-    val cand = SnapshotTable.pruneFilesForKeys(spark, pruned, v0,
-      Seq("id"), Seq(3L, 1777L, 9L, 5000L)
+    val cand = SnapshotTable.pruneFilesForKeys(spark, pruned,
+      SnapshotTable.snapshot(spark, pruned, Some(v0), "spec"), Seq("id"), Seq(3L, 1777L, 9L, 5000L)
         .map(org.apache.spark.sql.Row(_)))
     val total = SnapshotTable.manifestFiles(spark, pruned, v0).length
     assert(total >= 8 && cand.length <= 2,

@@ -176,7 +176,8 @@ class Scd2Spec extends AnyFunSuite {
     // the probe the maintain routes through: candidates ≪ total files
     val keyRows = Seq(org.apache.spark.sql.Row(5L),
       org.apache.spark.sql.Row(700L))
-    val cand = SnapshotTable.pruneFilesForKeys(spark, dim, dimV,
+    val cand = SnapshotTable.pruneFilesForKeys(spark, dim,
+      SnapshotTable.snapshot(spark, dim, Some(dimV), "spec"),
       Seq("id"), keyRows)
     assert(cand.length <= 2 && cand.length < total,
       s"expected ≤2 of $total candidate files, got ${cand.length}")

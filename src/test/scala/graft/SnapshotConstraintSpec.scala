@@ -25,7 +25,7 @@ class SnapshotConstraintSpec extends AnyFunSuite {
     }
     assert(SnapshotTable.latestVersion(spark, dir).contains(0L))
     val v = SnapshotTable.addConstraint(spark, dir, "bounded", "id < 100")
-    assert(SnapshotTable.manifestConstraints(spark, dir, v) ==
+    assert(SnapshotTable.snapshot(spark, dir, Some(v), "spec").state.constraints ==
       Map("bounded" -> "id < 100"))
     // violating batch refused BEFORE any data write or commit
     intercept[IllegalArgumentException] {
@@ -103,7 +103,7 @@ class SnapshotConstraintSpec extends AnyFunSuite {
     val dir = tmp("race")
     SnapshotTable.append(spark.range(0, 10).toDF(), dir)
     val files = SnapshotTable.manifestFiles(spark, dir, 0L)
-    val schema = SnapshotTable.manifestSchema(spark, dir, 0L)
+    val schema = SnapshotTable.snapshot(spark, dir, Some(0L), "spec").state.schema
     val cs = Map("bounded" -> "id < 5")
     // nothing validated yet → the written files re-probe and refuse
     val e = intercept[IllegalArgumentException] {
@@ -134,9 +134,9 @@ class SnapshotConstraintSpec extends AnyFunSuite {
     // rewrite; policy recorded at v1 (constraint) must survive, and so
     // must v2's bucket claim resolution through the rewritten chain
     SnapshotTable.vacuum(spark, dir, keepVersions = 2, minAgeMs = 0L)
-    assert(SnapshotTable.manifestConstraints(spark, dir, head) ==
+    assert(SnapshotTable.snapshot(spark, dir, Some(head), "spec").state.constraints ==
       Map("k_pos" -> "k >= 0"))
-    assert(SnapshotTable.manifestBucket(spark, dir, head).nonEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, Some(head), "spec").state.bucket.nonEmpty)
     // and enforcement still works post-vacuum
     intercept[IllegalArgumentException] {
       SnapshotTable.append(Seq((-1L, 0L)).toDF("k", "v"), dir)

@@ -77,8 +77,8 @@ class SnapshotOpsSpec extends AnyFunSuite {
     SnapshotTable.setProperties(spark, dir, Map("k" -> "v"))      // v2
     assert(SnapshotTable.restore(spark, dir, 0L).isEmpty)
     // and the policy is still in force
-    assert(SnapshotTable.manifestConstraints(spark, dir,
-      SnapshotTable.latestVersion(spark, dir).get).contains("nonneg"))
+    assert(SnapshotTable.snapshot(spark, dir,
+      Some(SnapshotTable.latestVersion(spark, dir).get), "spec").state.constraints.contains("nonneg"))
   }
 
   /** The table metadata a commit either carries forward, replaces or
@@ -90,14 +90,11 @@ class SnapshotOpsSpec extends AnyFunSuite {
       defaults: Map[String, (String, Set[String])],
       bucket: Option[SnapshotTable.BucketLayout], txns: Map[String, Long])
 
-  private def policy(dir: String, v: Long): Policy = Policy(
-    SnapshotTable.manifestConstraints(spark, dir, v),
-    SnapshotTable.manifestProps(spark, dir, v),
-    SnapshotTable.manifestColMap(spark, dir, v),
-    SnapshotTable.manifestRetired(spark, dir, v),
-    SnapshotTable.manifestDefaults(spark, dir, v),
-    SnapshotTable.manifestBucket(spark, dir, v),
-    SnapshotTable.manifestTxns(spark, dir, v))
+  private def policy(dir: String, v: Long): Policy = {
+    val st = SnapshotTable.snapshot(spark, dir, Some(v), "spec").state
+    Policy(st.constraints, st.props, st.colMap, st.retired, st.defaults,
+      st.bucket, st.txns)
+  }
 
   /** An independent copy of a table directory (manifests reference
     * data files relative to the table root). */
@@ -224,7 +221,7 @@ class SnapshotOpsSpec extends AnyFunSuite {
     val v = SnapshotTable.restore(spark, dir, 1L).get
     // masked rows are back (the pre-vector dvRefs state is reinstated)
     assert(ids(SnapshotTable.read(spark, dir)) == (0L until 60L).toSet)
-    assert(SnapshotTable.manifestDvRefs(spark, dir, v).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, Some(v), "spec").state.dvRefs.isEmpty)
     // ledger survived the rollback: the replayed batch stays a no-op
     assert(SnapshotTable.transactionalAppend(
       spark.range(999, 1100).toDF(), dir, "app", 7L).isEmpty)
@@ -246,7 +243,7 @@ class SnapshotOpsSpec extends AnyFunSuite {
     // MoR kept every original file (masked, not rewritten) and added new
     val filesAfter = SnapshotTable.manifestFiles(spark, mor, v).toSet
     assert(filesBefore.subsetOf(filesAfter) && filesAfter != filesBefore)
-    assert(SnapshotTable.manifestDvRefs(spark, mor, v).nonEmpty)
+    assert(SnapshotTable.snapshot(spark, mor, Some(v), "spec").state.dvRefs.nonEmpty)
     // identical result to the CoW twin
     def snap(d: String) = SnapshotTable.read(spark, d)
       .select("id", "status", "amount").collect()
@@ -276,7 +273,7 @@ class SnapshotOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(snap() == expect)
     val cv = SnapshotTable.compact(spark, dir).get
-    assert(SnapshotTable.manifestDvRefs(spark, dir, cv).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, Some(cv), "spec").state.dvRefs.isEmpty)
     assert(snap() == expect)
   }
 
@@ -313,7 +310,7 @@ class SnapshotOpsSpec extends AnyFunSuite {
     SnapshotTable.append(spark.range(100, 200).coalesce(1).toDF(), dir)
     SnapshotTable.deleteWhereMor(spark, dir, $"id" === 5L || $"id" === 150L)
     val v = SnapshotTable.compactWhere(spark, dir, "id", 0L, 99L).get
-    val dv = SnapshotTable.manifestDvRefs(spark, dir, v)
+    val dv = SnapshotTable.snapshot(spark, dir, Some(v), "spec").state.dvRefs
     // the out-of-scope file keeps its vector; the in-scope one purged
     assert(dv.size == 1)
     assert(ids(SnapshotTable.read(spark, dir)) ==
@@ -482,7 +479,7 @@ class SnapshotOpsSpec extends AnyFunSuite {
       SnapshotTable.append(
         spark.range(300000L + i, 300001L + i).coalesce(1).toDF(), dir)
     val vBefore = SnapshotTable.latestVersion(spark, dir).get
-    val sizes = SnapshotTable.manifestSizes(spark, dir, vBefore)
+    val sizes = SnapshotTable.snapshot(spark, dir, Some(vBefore), "spec").state.sizes
     val big = sizes.maxBy(_._2)._1
     val threshold = sizes(big) // everything strictly below the big file
     val v = SnapshotTable.binPackSmall(spark, dir, threshold).get

@@ -406,7 +406,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     SnapshotTable.appendPartitioned(df, dir, Seq("day"))
     val v0 = SnapshotTable.latestVersion(spark, dir).get
     // Every data file holds exactly one day (min == max in stats).
-    val stats = SnapshotTable.manifestStats(spark, dir, v0)
+    val stats = SnapshotTable.snapshot(spark, dir, Some(v0), "spec").state.stats
     val files = SnapshotTable.manifestFiles(spark, dir, v0)
     assert(files.nonEmpty && files.forall(stats.contains))
     files.foreach { f =>
@@ -987,7 +987,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     SnapshotTable.deleteWhere(spark, dir, $"id" === 50L)
     val v = SnapshotTable.latestVersion(spark, dir).get
     val files = SnapshotTable.manifestFiles(spark, dir, v)
-    val sizes = SnapshotTable.manifestSizes(spark, dir, v)
+    val sizes = SnapshotTable.snapshot(spark, dir, Some(v), "spec").state.sizes
     assert(sizes.keySet == files.toSet,
       "every live file (original and rewritten) must carry a size")
     files.foreach { k =>
@@ -998,7 +998,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // Sizes survive the delta-chain replay AND a clone (absolutized).
     val dst = Files.createTempDirectory("graft-snap-szc").toString + "/c"
     SnapshotTable.shallowClone(spark, dir, dst)
-    assert(SnapshotTable.manifestSizes(spark, dst, 0L).values.toSeq.sorted ==
+    assert(SnapshotTable.snapshot(spark, dst, Some(0L), "spec").state.sizes.values.toSeq.sorted ==
       sizes.values.toSeq.sorted)
   }
 
@@ -1108,7 +1108,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // compact materializes: values persist, the defaults map drains
     SnapshotTable.compact(spark, dir, clusterBy = Seq("id"))
     val head = SnapshotTable.latestVersion(spark, dir).get
-    assert(SnapshotTable.manifestDefaults(spark, dir, head).isEmpty,
+    assert(SnapshotTable.snapshot(spark, dir, Some(head), "spec").state.defaults.isEmpty,
       "all pre-ADD files rewritten — the entry must retire")
     assert(scores(SnapshotTable.read(spark, dir)) == expect)
   }
@@ -1141,7 +1141,7 @@ class SnapshotTableSpec extends AnyFunSuite {
         s"timestamp statsCols must summarize from footers alone, " +
           s"ran ${summaryJobs.get} scan job(s)")
       val v = SnapshotTable.latestVersion(spark, dir).get
-      val stats = SnapshotTable.manifestStats(spark, dir, v)
+      val stats = SnapshotTable.snapshot(spark, dir, Some(v), "spec").state.stats
       assert(stats.size == 2 &&
         stats.values.forall(_.get("ts").exists(_.tag == "ts")),
         s"every file must carry a ts-domain stat: $stats")
