@@ -414,13 +414,16 @@ object LiveSnapshotRelation {
 
 /** Manifest-backed [[FileIndex]] over one resolved snapshot state —
   * the SQL surfaces' relations and [[SnapshotTable]]'s programmatic
-  * reads plan from it alike. Thread-safety: the pruning inputs are
-  * immutable snapshot state; `lastDecision` is advisory observability
-  * for specs. */
+  * reads plan from it alike. The SQL relations `prune` pushed filters
+  * through the manifest summaries; a programmatic read has already
+  * pruned its explicit file list and plans it as-is. Thread-safety:
+  * the pruning inputs are immutable snapshot state; `lastDecision` is
+  * advisory observability for specs. */
 final class SnapshotFileIndex(spark: SparkSession, dir: String,
                               state: SnapshotTable.TableState,
                               schema: StructType,
-                              only: Option[Seq[String]] = None
+                              only: Option[Seq[String]] = None,
+                              prune: Boolean = true
                              ) extends FileIndex {
 
   /** Manifest-relative key → FileStatus, in manifest order, built from
@@ -429,8 +432,8 @@ final class SnapshotFileIndex(spark: SparkSession, dir: String,
     * stores need; see [[SnapshotTable.fileStatuses]]). `only`
     * restricts the index to a subset (the per-group scans a
     * defaults-split [[SnapshotSql.dataFrame]] builds, or the explicit
-    * file list of a programmatic read); manifest pruning then filters
-    * within it. */
+    * file list of a programmatic read); manifest pruning, when on,
+    * then filters within it. */
   private val statuses: Seq[(String, FileStatus)] =
     SnapshotTable.fileStatuses(spark, dir, only.getOrElse(state.files),
       state.sizes)
@@ -457,7 +460,7 @@ final class SnapshotFileIndex(spark: SparkSession, dir: String,
     // Attribute names here come from the SCAN schema — PHYSICAL under
     // an active column mapping — so the probe goes through the
     // physical (translation-free) pruning variants.
-    val selected = dataFilters.flatMap(splitAnd)
+    val selected = (if (prune) dataFilters.flatMap(splitAnd) else Nil)
       .foldLeft(statuses.map(_._1)) {
         case (fs, Eq(c, v)) =>
           SnapshotTable.pruneFilesEqPhys(spark, dir, state, fs, c, v)

@@ -272,12 +272,13 @@ object SnapshotTable {
 
   /** Latest committed version, or None for an empty/uninitialized
     * table. One directory listing of `_manifests/` — never of the
-    * data. */
+    * data; a missing directory surfaces from the listing itself. */
   def latestVersion(spark: SparkSession, dir: String): Option[Long] = {
     val f = fs(spark, dir)
-    val md = manifestDir(dir)
-    if (!f.exists(md)) return None
-    val vs = f.listStatus(md).toSeq
+    val listed =
+      try f.listStatus(manifestDir(dir))
+      catch { case _: java.io.FileNotFoundException => return None }
+    val vs = listed.toSeq
       .map(_.getPath.getName)
       .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
         s.stripPrefix("v").stripSuffix(".json") }
@@ -978,18 +979,6 @@ object SnapshotTable {
     blooms.keys.map(_ -> rel).toMap
   }
 
-  /** Loaded sidecars by path, bounded like [[segmentCache]]. A sidecar
-    * is immutable once written and named by its batch UUID, so an
-    * entry never goes stale. A point lookup prunes through the
-    * sidecars, then plans its scan from a [[SnapshotFileIndex]] that
-    * prunes the pushed predicate again — between them each sidecar is
-    * read once. */
-  private val sidecarCache = new java.util.LinkedHashMap[String,
-      Map[String, Map[String, Array[Byte]]]](64, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String,
-        Map[String, Map[String, Array[Byte]]]]): Boolean = size() > 48
-  }
-
   /** Load one sidecar (relative ref under this table, or a shallow
     * clone's absolute ref into its source table). */
   private def loadBloomSidecar(spark: SparkSession, dir: String,
@@ -997,19 +986,12 @@ object SnapshotTable {
                               ): Map[String, Map[String, Array[Byte]]] = {
     val p = if (ref.startsWith("_blooms/")) new Path(dir, ref)
             else new Path(ref)
-    val key = p.toUri.getPath
-    sidecarCache.synchronized {
-      val hit = sidecarCache.get(key)
-      if (hit != null) return hit
-    }
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(p)) return Map.empty // vacuumed sidecar: un-probeable, kept
     val in = f.open(p)
     val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
-    val side = bloomMapOf(mapper.readTree(txt))
-    sidecarCache.synchronized { sidecarCache.put(key, side); () }
-    side
+    bloomMapOf(mapper.readTree(txt))
   }
 
   /** Add-column schema evolution (the [[graft.catalog.Catalog]] /
@@ -1069,16 +1051,16 @@ object SnapshotTable {
     * no recorded size), so there is no listing job and no per-file
     * RPC — where `spark.read.parquet(paths)` would re-stat every path
     * and, above `parallelPartitionDiscovery.threshold`, launch a
-    * listing job per read. Pushed filters prune through `st`'s
-    * stats/Bloom summaries; files `st` has no summary for (a batch not
-    * yet committed) are always kept. */
+    * listing job per read. The caller already chose `files` from
+    * `st`'s summaries, so the index does not prune them again. */
   private def readFiles(spark: SparkSession, dir: String, st: TableState,
                         files: Seq[String],
                         schema: Option[StructType]): DataFrame =
     schema match {
       case Some(sch) if files.nonEmpty =>
         val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-          new SnapshotFileIndex(spark, dir, st, sch, Some(files)),
+          new SnapshotFileIndex(spark, dir, st, sch, Some(files),
+            prune = false),
           new StructType(), sch, None,
           new org.apache.spark.sql.execution.datasources.parquet
             .ParquetFileFormat(), Map.empty)(spark)
@@ -1467,7 +1449,16 @@ object SnapshotTable {
     * entry (and, eventually, the whole column's) retires.
     * Content-atomic: the body is fully written to a hidden temp file,
     * then renamed into place — a reader can never observe a
-    * partially-written manifest. */
+    * partially-written manifest.
+    *
+    * A STALE parent also loses: a writer's first attempt starts from
+    * the snapshot it resolved before writing its data, and a [[vacuum]]
+    * meanwhile may have deleted v itself (after later commits landed),
+    * so a free slot at v does not prove v-1 is still the head. Vacuum
+    * deletes manifests in ascending order and only below the newest
+    * version, so a vacuumed v implies a vacuumed v-1: checking v-1
+    * AFTER v rejects exactly that case (and a v0 whose table already
+    * has versions). */
   private def tryCommit(spark: SparkSession, dir: String, v: Long,
                         parent: Option[TableState], target: TableState,
                         op: String): Boolean = commitLock.synchronized {
@@ -1475,6 +1466,10 @@ object SnapshotTable {
     f.mkdirs(manifestDir(dir))
     val path = manifestPath(dir, v)
     if (f.exists(path)) return false
+    val parentGone =
+      if (v == 0L) latestVersion(spark, dir).nonEmpty
+      else !f.exists(manifestPath(dir, v - 1))
+    if (parentGone) return false
     val live = target.files.toSet
     val pruned = target.copy(defaults = target.defaults
       .map { case (c, (dv, pre)) => c -> (dv, pre.intersect(live)) }
@@ -5228,9 +5223,11 @@ object SnapshotTable {
     // The snapshot the rewrite was built from — its logical names
     // (writeBatch's column-mapping race contract) and its deletion
     // vectors (the conflict check below) — and the commit's first
-    // base; a caller that built from no snapshot gets the head.
+    // base; a caller that built from no snapshot writes and commits
+    // against the head, but checks vectors against NONE: any vector
+    // on a touched file may postdate its read, so it conflicts.
     val head = base.orElse(headSnapshot(spark, dir))
-    val baseDv = head.map(_.state.dvRefs).getOrElse(Map.empty)
+    val baseDv = base.map(_.state.dvRefs).getOrElse(Map.empty)
     // strictBlooms=false: bloomCols here is the table's RECORDED
     // tracking list — legacy ineligible entries drop, never wedge a
     // row-level op on a pre-r7 table.

@@ -11,8 +11,7 @@ import graft.sources.SnapshotTable
 /** `file:` filesystem that counts `getFileStatus` and `listStatus`
   * calls on paths under [[ManifestCountingFs.scope]] (made by
   * [[ManifestCountingFs.thread]] only, when set), and runs a one-shot
-  * hook right after the next listing of the scoped directory itself
-  * returns. */
+  * hook right after an armed listing returns. */
 class ManifestCountingFs extends LocalFileSystem {
   import ManifestCountingFs._
   override def getFileStatus(f: Path): FileStatus = {
@@ -21,8 +20,10 @@ class ManifestCountingFs extends LocalFileSystem {
   override def listStatus(f: Path): Array[FileStatus] = {
     hit(f, lists)
     val out = super.listStatus(f)
-    if (scope.contains(f.toUri.getPath))
-      afterList.getAndSet(None).foreach(_())
+    val armed = afterList.get
+    armed.foreach { case (matches, run) =>
+      if (matches(f) && afterList.compareAndSet(armed, None)) run()
+    }
     out
   }
 }
@@ -32,10 +33,23 @@ object ManifestCountingFs {
   @volatile var thread: Option[Thread] = None
   val stats = new AtomicLong
   val lists = new AtomicLong
-  private val afterList = new AtomicReference[Option[() => Unit]](None)
+  private val afterList =
+    new AtomicReference[Option[(Path => Boolean, () => Unit)]](None)
 
   /** Run `f` once, right after the next listing of [[scope]]. */
-  def onNextList(f: => Unit): Unit = afterList.set(Some(() => f))
+  def onNextList(f: => Unit): Unit =
+    afterList.set(Some((p: Path) => scope.contains(p.toUri.getPath),
+      () => f))
+
+  /** Run `f` once, right after the calling thread next lists a
+    * directory directly under `parent` — for `data/`, a batch
+    * directory, listed once its write has finished. */
+  def onNextListUnder(parent: Path)(f: => Unit): Unit = {
+    val armedBy = Thread.currentThread()
+    val pp = parent.toUri.getPath
+    afterList.set(Some((p: Path) => (Thread.currentThread() eq armedBy) &&
+      Option(p.getParent).exists(_.toUri.getPath == pp), () => f))
+  }
   def disarm(): Unit = afterList.set(None)
 
   private def hit(f: Path, c: AtomicLong): Unit =
@@ -54,10 +68,11 @@ object ManifestCountingFs {
   * whatever the table's history. Also pins that a read resolves ONE
   * version even when a commit lands between its steps, that a
   * compaction whose input a delete rewrote meanwhile fails instead of
-  * resurrecting rows, and that a read plans from manifest-recorded
-  * sizes without stat calls on its data files. The counting filesystem is installed through
-  * `fs.file.impl` with the FileSystem cache disabled, for this suite
-  * only. */
+  * resurrecting rows, that a writer whose base a vacuum removed
+  * meanwhile commits on the new head, and that a read plans from
+  * manifest-recorded sizes without stat calls on its data files. The
+  * counting filesystem is installed through `fs.file.impl` with the
+  * FileSystem cache disabled, for this suite only. */
 class SnapshotFsCallsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -137,13 +152,13 @@ class SnapshotFsCallsSpec extends AnyFunSuite with BeforeAndAfterAll {
         (d, v) => SnapshotTable.merge(spark, d,
           Seq((v, "m")).toDF("id", "v"), Seq("id")), true, (3L, 1L)),
       ("read",
-        (d, _) => SnapshotTable.read(spark, d).collect(), false, (2L, 1L)),
+        (d, _) => SnapshotTable.read(spark, d).collect(), false, (1L, 1L)),
       ("readWhereEq",
         (d, v) => SnapshotTable.readWhereEq(spark, d, "id", v).collect(),
-        false, (2L, 1L)),
+        false, (1L, 1L)),
       ("sqlLookup",
         (d, v) => spark.sql(s"SELECT * FROM graft.`$d` WHERE id = $v")
-          .collect(), false, (2L, 1L)))
+          .collect(), false, (1L, 1L)))
 
   ops.foreach { case (name, op, commits, expected) =>
     val per = if (commits) "commit" else "read"
@@ -221,6 +236,39 @@ class SnapshotFsCallsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val ids = SnapshotTable.read(spark, dir).collect().map(_.getLong(0))
     assert(ids.sorted.toSeq == (1L to 20L).filter(_ != 5L))
+  }
+
+  test("a writer whose base version was vacuumed meanwhile commits on " +
+    "the new head") {
+    // Right after the append has written its data files, two other
+    // appends land and a vacuum keeping one version deletes every
+    // manifest below the new head — including the slot right after
+    // the append's base. Committing into that free slot would publish
+    // a version below the head: never listed, later vacuumed, its rows
+    // lost while the append reported success.
+    Seq(true, false).foreach { committed =>
+      val dir = Files.createTempDirectory("graft-fscalls-vac")
+        .toString + "/t"
+      if (committed)
+        SnapshotTable.append(Seq((1L, "a")).toDF("id", "v"), dir)
+      else // an empty _manifests/: the base is "no table yet"
+        Files.createDirectories(java.nio.file.Paths.get(dir, "_manifests"))
+      val base = SnapshotTable.latestVersion(spark, dir)
+      ManifestCountingFs.onNextListUnder(new Path(dir, "data")) {
+        SnapshotTable.append(Seq((2L, "b")).toDF("id", "v"), dir)
+        SnapshotTable.append(Seq((3L, "c")).toDF("id", "v"), dir)
+        SnapshotTable.vacuum(spark, dir, keepVersions = 1)
+        assert(SnapshotTable.latestVersion(spark, dir) ==
+          Some(base.fold(0L)(_ + 1) + 1))
+      }
+      try SnapshotTable.append(Seq((4L, "d")).toDF("id", "v"), dir)
+      finally ManifestCountingFs.disarm()
+      assert(head(dir) == base.fold(0L)(_ + 1) + 2,
+        s"committed=$committed: head v${head(dir)}")
+      val ids = SnapshotTable.read(spark, dir).collect().map(_.getLong(0))
+      val want = (if (committed) Seq(1L) else Nil) ++ Seq(2L, 3L, 4L)
+      assert(ids.sorted.toSeq == want, s"committed=$committed")
+    }
   }
 
   test("a read plans from manifest sizes: no data-file stat calls on " +
